@@ -211,6 +211,11 @@ object ConnectedComponents {
         iter += 1
       }
     }
+    // an unconverged forest is not the answer: fail like Engine.kleene does
+    if (!converged)
+      throw new IllegalStateException(
+        s"connected components did not converge within $maxIter rounds; " +
+          "raise maxIter for graphs of larger diameter.")
     edges
   }
 

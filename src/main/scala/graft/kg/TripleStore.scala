@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-shaped partitioned triple store over parquet (no Iceberg jars
   * ship with this image — SURVEY §7): snapshot ids, append /
@@ -17,6 +18,7 @@ import org.apache.spark.sql.functions._
 final class TripleStore(spark: SparkSession, root: String) {
   import spark.implicits._
   import TripleStore.partName
+  private type Log = Seq[(Long, String, Long, Long)]
   private val dataPath = s"$root/data"
   private val snapPath = s"$root/_snapshots"
   // partition-name format marker: v2 = the "([^#/]+)[#/]*$" extraction
@@ -107,18 +109,20 @@ final class TripleStore(spark: SparkSession, root: String) {
     ensureFormatMarker() // verified adoption: existing names all agree
   }
 
-  /** Snapshot log. ONLY a missing log reads as empty — any other failure
-    * (throttling, transient IO) must surface, because treating it as "no
-    * snapshots" would reuse snapshot id 1 and corrupt history. */
-  private def log(): Seq[(Long, String, Long, Long)] =
+  /** Snapshot log (id, op, committed_at, rows), sorted by id. ONLY a
+    * missing log reads as empty — any other failure (throttling, transient
+    * IO) must surface, because treating it as "no snapshots" would reuse
+    * snapshot id 1 and corrupt history. Read with its known schema, so one
+    * read is one job; each public operation reads it once. */
+  private def log(): Log =
     if (!snapLogExists()) Nil
-    else spark.read.parquet(snapPath).as[(Long, String, Long, Long)].collect().toSeq.sortBy(_._1)
+    else spark.read.schema(TripleStore.LogSchema).parquet(snapPath)
+      .as[(Long, String, Long, Long)].collect().toSeq.sortBy(_._1)
+
+  private def latest(l: Log): Option[Long] = l.lastOption.map(_._1)
 
   def snapshots(): Seq[Long] = log().map(_._1)
-  def currentSnapshot(): Option[Long] = {
-    val l = log()
-    if (l.isEmpty) None else Some(l.map(_._1).max)
-  }
+  def currentSnapshot(): Option[Long] = latest(log())
 
   private def appendLog(id: Long, op: String, rows: Long): Unit =
     Seq((id, op, System.currentTimeMillis(), rows))
@@ -131,11 +135,6 @@ final class TripleStore(spark: SparkSession, root: String) {
     * under another (silently unreadable data). */
   private def withPart(df: DataFrame): DataFrame =
     df.withColumn("p_part", regexp_extract(col("p"), "([^#/]+)[#/]*$", 1))
-
-  /** Rows actually landed in snapshot `id` (partition-pruned scan of the
-    * fresh files — re-counting the input would re-run its whole plan). */
-  private def writtenRows(id: Long): Long =
-    spark.read.parquet(dataPath).filter(col("snap") === id).count()
 
   /** Remove data directories for snapshot ids at/above the next id — the
     * leftovers of a write that crashed before its log append (the log
@@ -154,18 +153,21 @@ final class TripleStore(spark: SparkSession, root: String) {
     }
   }
 
-  private def commitSnapshot(df: DataFrame, op: String): Long = {
+  /** Write `df` as snapshot (latest id in `l`) + 1 and log it. The logged
+    * row count is what the write itself counted: re-counting the input
+    * would re-run its whole plan, and re-scanning the files is a job. */
+  private def commitSnapshot(df: DataFrame, op: String, l: Log): Long = {
     checkFormat(); ensureFormatMarker()
-    val id = currentSnapshot().getOrElse(0L) + 1L
+    val id = latest(l).getOrElse(0L) + 1L
     cleanUncommitted(id)
-    val out = withPart(df).withColumn("snap", lit(id))
-    out.write.mode(SaveMode.Append).partitionBy("p_part", "snap").parquet(dataPath)
-    appendLog(id, op, writtenRows(id))
+    val rows = CountedWrite(withPart(df).withColumn("snap", lit(id)))(
+      _.write.mode(SaveMode.Append).partitionBy("p_part", "snap").parquet(dataPath))
+    appendLog(id, op, rows)
     id
   }
 
   /** Append (s,p,o) rows as a new snapshot. */
-  def append(df: DataFrame): Long = commitSnapshot(df, "append")
+  def append(df: DataFrame): Long = commitSnapshot(df, "append", log())
 
   /** Idempotent per-micro-batch append for Structured Streaming sinks:
     * the batch commits as ONE snapshot tagged `stream:<batchId>`; a batch
@@ -174,8 +176,9 @@ final class TripleStore(spark: SparkSession, root: String) {
     * recovery would duplicate its rows). Returns the snapshot id, or None
     * when the batch was already committed. */
   def appendBatch(df: DataFrame, batchId: Long): Option[Long] = {
-    if (log().exists(_._2 == s"stream:$batchId")) None
-    else Some(commitSnapshot(df, s"stream:$batchId"))
+    val l = log()
+    if (l.exists(_._2 == s"stream:$batchId")) None
+    else Some(commitSnapshot(df, s"stream:$batchId", l))
   }
 
   /** Overwrite the given predicate partitions with `df` (other partitions
@@ -186,16 +189,18 @@ final class TripleStore(spark: SparkSession, root: String) {
     * still scans intact inputs, and readAt time travel keeps working).
     * Physical deletion is a separate, explicit vacuum(). */
   def overwritePartitions(df: DataFrame, preds: Seq[String]): Long =
-    overwriteParts(df, preds.map(partName))
+    overwriteParts(df, preds.map(partName), log())
 
-  private def overwriteParts(df: DataFrame, parts: Seq[String]): Long =
+  private def overwriteParts(df: DataFrame, parts: Seq[String], l: Log): Long =
     commitSnapshot(withPart(df).filter(col("p_part").isin(parts: _*)).drop("p_part"),
-      s"overwrite:${parts.mkString(",")}")
+      s"overwrite:${parts.mkString(",")}", l)
 
   /** Live parquet file count per partition (scan-planning cost proxy). */
-  def liveFileCounts(): Map[String, Int] = {
-    val atId = currentSnapshot().getOrElse(return Map.empty)
-    val over = overwrittenAt(atId)
+  def liveFileCounts(): Map[String, Int] = liveFileCounts(log())
+
+  private def liveFileCounts(l: Log): Map[String, Int] = {
+    val atId = latest(l).getOrElse(return Map.empty)
+    val over = overwrittenAt(l, atId)
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(dataPath)
     val fs = root.getFileSystem(conf)
@@ -221,10 +226,11 @@ final class TripleStore(spark: SparkSession, root: String) {
     * time travel until vacuum(), like any other overwrite. Returns the
     * new snapshot id, or None when nothing crosses the threshold. */
   def compact(targetRowsPerFile: Long = 4000000L, minFiles: Int = 2): Option[Long] = {
-    val snap = currentSnapshot().getOrElse(return None)
-    val parts = liveFileCounts().filter(_._2 >= minFiles).keys.toSeq.sorted
+    val l = log()
+    val snap = latest(l).getOrElse(return None)
+    val parts = liveFileCounts(l).filter(_._2 >= minFiles).keys.toSeq.sorted
     if (parts.isEmpty) return None
-    val live = liveAt(snap)
+    val live = liveAt(l, snap)
     val counts = live.filter(col("p_part").isin(parts: _*))
       .groupBy($"p_part").agg(count(lit(1)).as("n"))
       .as[(String, Long)].collect()
@@ -233,25 +239,25 @@ final class TripleStore(spark: SparkSession, root: String) {
       val files = math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
       live.filter($"p_part" === pp).drop("snap", "p_part").repartition(files)
     }
-    Some(overwriteParts(legs.reduce(_ unionByName _), counts.map(_._1).toSeq))
+    Some(overwriteParts(legs.reduce(_ unionByName _), counts.map(_._1).toSeq, l))
   }
 
   /** Latest overwrite snapshot per partition at or before `atId`:
     * rows of that partition from earlier snapshots are dead. */
-  private def overwrittenAt(atId: Long): Map[String, Long] =
-    log().filter(_._1 <= atId).flatMap { case (id, op, _, _) =>
+  private def overwrittenAt(l: Log, atId: Long): Map[String, Long] =
+    l.filter(_._1 <= atId).flatMap { case (id, op, _, _) =>
       if (op.startsWith("overwrite:"))
         op.stripPrefix("overwrite:").split(",").filter(_.nonEmpty).map(_ -> id)
       else Nil
     }.groupBy(_._1).map { case (pp, xs) => pp -> xs.map(_._2).max }
 
-  private def liveAt(atId: Long): DataFrame = {
+  private def liveAt(l: Log, atId: Long): DataFrame = {
     checkFormat()
-    if (log().isEmpty)
+    if (l.isEmpty)
       throw new IllegalStateException(
         s"TripleStore at $root has no committed snapshots (probe with currentSnapshot())")
     val base = spark.read.parquet(dataPath).filter(col("snap") <= atId)
-    overwrittenAt(atId).map { case (pp, oid) =>
+    overwrittenAt(l, atId).map { case (pp, oid) =>
       col("p_part") === pp && col("snap") < oid
     }.reduceOption(_ || _) match {
       case Some(dead) => base.filter(!dead)
@@ -261,19 +267,22 @@ final class TripleStore(spark: SparkSession, root: String) {
 
   /** Read the current table (only live rows: superseded partition
     * snapshots are masked by the log, not physically deleted). */
-  def read(): DataFrame =
-    liveAt(currentSnapshot().getOrElse(0L)).drop("snap", "p_part")
+  def read(): DataFrame = current().drop("snap", "p_part")
 
   /** Snapshot read (time travel): the table exactly as of snapshot `id`. */
-  def readAt(id: Long): DataFrame = liveAt(id).drop("snap", "p_part")
+  def readAt(id: Long): DataFrame = liveAt(log(), id).drop("snap", "p_part")
+
+  private def current(): DataFrame = {
+    val l = log()
+    liveAt(l, latest(l).getOrElse(0L))
+  }
 
   /** Predicate-pruned scan — the hot path for SHACL targets/paths: the
     * filter lands on the partition column, so only matching directories
     * are listed/read. */
   def scanPredicate(pred: String): DataFrame = {
     val pp = partName(pred)
-    liveAt(currentSnapshot().getOrElse(0L))
-      .filter(col("p_part") === pp && col("p") === pred)
+    current().filter(col("p_part") === pp && col("p") === pred)
       .drop("snap", "p_part")
   }
 
@@ -283,7 +292,6 @@ final class TripleStore(spark: SparkSession, root: String) {
     * schema renders s/p as IRIs and o as an IRI when it carries a scheme,
     * a quoted literal otherwise. */
   def exportNTriples(path: String): Unit = {
-    import org.apache.spark.sql.types.StructType
     val df = read()
     df.schema("s").dataType match {
       case _: StructType => graft.rdf.TriplesDF.writeNTriples(df, path)
@@ -306,7 +314,8 @@ final class TripleStore(spark: SparkSession, root: String) {
     val root = new org.apache.hadoop.fs.Path(dataPath)
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return
-    for ((pp, oid) <- overwrittenAt(currentSnapshot().getOrElse(0L))) {
+    val l = log()
+    for ((pp, oid) <- overwrittenAt(l, latest(l).getOrElse(0L))) {
       val partDir = new org.apache.hadoop.fs.Path(root, s"p_part=$pp")
       if (fs.exists(partDir)) {
         for (st <- fs.listStatus(partDir) if st.isDirectory) {
@@ -324,6 +333,11 @@ object TripleStore {
   /** Partition-name scheme version; bumped whenever partName/withPart
     * change how p_part values are derived. */
   val FormatVersion = 2
+
+  /** Schema of the snapshot log's parquet files (unchanged since the log
+    * was introduced), given to its reads so they skip schema inference. */
+  val LogSchema: StructType =
+    StructType.fromDDL("snapshot_id BIGINT, op STRING, committed_at BIGINT, rows BIGINT")
 
   /** Predicate IRI -> partition local name: the segment after the last
     * '#' or '/' (ignoring trailing separators); IRIs with neither (urn:)

@@ -19,7 +19,7 @@ import graft.kg.Lineage
   * Every stage is a pure DataFrame -> DataFrame function — q_clean_pipeline
   * composes them directly and its DuckDB oracle recomputes the whole chain
   * — and [[run]] wraps them in the same [[graft.kg.Lineage]] layer
-  * KgPipeline uses: per-stage parquet output, a lineage row per stage, and
+  * KgPipeline uses: per-stage parquet output, a lineage entry per stage, and
   * (rows_in, rows_out, dropped-reason) metrics, so a SIGKILL'd run resumes
   * from the last completed stage with identical results (every stage is
   * deterministic: hash-derived decisions only, no RNG).
@@ -96,13 +96,10 @@ object CleanPipeline {
       val fresh = !lin.isDone(name, checksum)
       val out = lin.stage(name, checksum)(f(in))
       val rows = lin.rowsOf(name).getOrElse(out.count())
-      if (fresh) {
-        if (prevRows >= 0) {
-          lin.metric(name, "rowsIn", prevRows.toDouble)
-          lin.metric(name, s"dropped_$reason", (prevRows - rows).toDouble)
-        }
-        lin.metric(name, "rowsOut", rows.toDouble)
-      }
+      // one commit; the stage's own commit already carries its rowsOut
+      if (fresh && prevRows >= 0)
+        lin.recordMetrics(name, "rowsIn" -> prevRows.toDouble,
+          s"dropped_$reason" -> (prevRows - rows).toDouble)
       prevRows = rows
       out
     }

@@ -1,7 +1,8 @@
 package graft.rdf
 
-/** Minimal JSON reader (shared by the SPARQL-Results-JSON comparator and
-  * the JSON-LD loader; no JSON library ships with this build). */
+/** Minimal JSON reader (shared by the SPARQL-Results-JSON comparator, the
+  * JSON-LD loader and the lineage log; no JSON library ships with this
+  * build), plus the string quoting the lineage log writes with. */
 object Json {
   sealed trait J
   final case class JObj(m: Map[String, J]) extends J
@@ -12,6 +13,18 @@ object Json {
   case object JNull extends J
 
   final class JsonError(msg: String) extends RuntimeException(msg)
+
+  /** `s` as a JSON string literal; control characters become \u escapes. */
+  def quote(s: String): String = {
+    val sb = new java.lang.StringBuilder("\"")
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
 
   def parse(s: String): J = {
     val p = new P(s)

@@ -130,7 +130,9 @@ object Validator {
        else if (opts.allowInfos) Set(SH.Info.value)
        else Set.empty[String])
     val blocking = bySev.filterNot { case (sev, _) => allowed.contains(sev) }.values.sum
-    val sampleRows = viol.limit(sampleSize).collect().toSeq
+    // on conforming data the sample would re-run every shape's plan only
+    // to come back empty
+    val sampleRows = (if (total == 0) Seq.empty else viol.limit(sampleSize).collect().toSeq)
       .map(r => ResultRow(
         focus = TriplesDF.nodeOf(r.getStruct(0)),
         value = Option(r.getStruct(1)).map(TriplesDF.nodeOf),

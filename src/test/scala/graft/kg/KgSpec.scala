@@ -70,6 +70,62 @@ class KgSpec extends AnyFunSuite {
     assert(withV == expected.toMap ++ Map(1L -> 1L, 2L -> 2L))
   }
 
+  test("CC raises at the iteration cap instead of returning an unconverged forest") {
+    // a chain scattered over 8 partitions with AQE coalescing off: the
+    // contracted set keeps several partitions, so the star rounds run, and
+    // one round cannot span the chain
+    val edges = (0L until 1999L).map(k => (k + 10000L, k + 10001L)).toDF("src", "dst")
+      .repartition(8)
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try {
+      val e = intercept[IllegalStateException](
+        ConnectedComponents.run(spark, edges, maxIter = 1).collect())
+      assert(e.getMessage.contains("did not converge within 1 rounds"))
+      // the default cap converges to the single component
+      val comps = ConnectedComponents.run(spark, edges).select($"component").distinct()
+        .as[Long].collect().toSeq
+      assert(comps == Seq(10000L))
+    } finally spark.conf.set(key, "true")
+  }
+
+  test("fresh stages: lineage rowsOut equals the output's parquet count, schema equals read-back") {
+    val out = java.nio.file.Files.createTempDirectory("kgfresh").toString
+    val lin = new Lineage(spark, out, "fresh")
+    val ck = "docs=300"
+    // KgPipeline.run's stage chain, keeping each returned frame
+    val docs = DocSynth.docs(spark, 300, seed = 42, partitions = 4)
+    val spans = lin.stage("spans", ck)(KgPipeline.tagSpans(docs))
+    val ments = lin.stage("mentions", ck)(KgPipeline.mentions(spans))
+    val links = lin.stage("links", ck)(KgPipeline.linkEntities(spark, ments).toDF())
+    val comps = lin.stage("components", ck)(KgPipeline.canonicalize(spark, links))
+    val triples = lin.stage("triples", ck)(
+      KgPipeline.materializeTriples(links, comps).unionByName(KgPipeline.mediaTriples(spark, spans)))
+    val reread = new Lineage(spark, out, "reader")
+    val rowsOutMetric = reread.metrics().filter($"metric" === "rowsOut")
+      .select($"stage", $"value").as[(String, Double)].collect().toMap
+    for ((name, df) <- Seq("spans" -> spans, "mentions" -> ments, "links" -> links,
+                           "components" -> comps, "triples" -> triples)) {
+      val back = spark.read.parquet(s"$out/$name")
+      val n = back.count()
+      assert(n > 0, name)
+      assert(lin.rowsOf(name).contains(n), name)
+      assert(reread.rowsOf(name).contains(n), name)
+      assert(rowsOutMetric(name) == n.toDouble, name)
+      assert(df.schema == back.schema, name)
+      assert(df.count() == n, name)
+    }
+    // the full pipeline on a fresh root agrees with the lineage counts
+    val root2 = java.nio.file.Files.createTempDirectory("kgfresh2").toString
+    val c = KgPipeline.run(spark, root2, 300, partitions = 4, validate = false, runId = "f")
+    val lin2 = new Lineage(spark, root2, "reader")
+    assert(lin2.rowsOf("spans").contains(c.spans))
+    assert(lin2.rowsOf("mentions").contains(c.mentions))
+    assert(lin2.rowsOf("links").contains(c.links))
+    assert(lin2.rowsOf("triples").contains(c.triples))
+    assert(lin2.rowsOf("store").contains(c.triples))
+  }
+
   test("span tagger preserves per-row span-sequence (kind,text,media_ref,order)") {
     val docs = DocSynth.docs(spark, 200, seed = 42, partitions = 4)
     val tagged = KgPipeline.tagSpans(docs)

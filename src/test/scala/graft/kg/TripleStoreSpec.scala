@@ -118,6 +118,31 @@ class TripleStoreSpec extends AnyFunSuite {
     assert(graft.rdf.TriplesDF.readNTriples(spark, ntDir).count() == st.read().count())
   }
 
+  test("each snapshot's logged rows equal a scan of that snapshot's files") {
+    val root = java.nio.file.Files.createTempDirectory("tstore").toString
+    val st = new TripleStore(spark, root)
+    val label = "http://kg#label"
+    st.append((1 to 5).map(i => (s"e:$i", label, s"v$i")).toDF("s", "p", "o"))
+    // one file, so compaction below touches only the label partition
+    st.append(Seq(("e:x", "http://kg#type", "T"), ("e:y", "http://kg#type", "T"))
+      .toDF("s", "p", "o").coalesce(1))
+    st.append(Seq.empty[(String, String, String)].toDF("s", "p", "o")) // an empty write logs 0
+    st.overwritePartitions((1 to 3).map(i => (s"e:$i", label, s"w$i")).toDF("s", "p", "o")
+      .union(Seq(("e:z", "http://kg#type", "ignored")).toDF("s", "p", "o")), Seq(label))
+    st.append(Seq(("e:9", label, "v9")).toDF("s", "p", "o"))
+    assert(st.compact(minFiles = 2).isDefined)
+    assert(st.appendBatch(Seq(("e:b", label, "b")).toDF("s", "p", "o"), batchId = 0L).isDefined)
+    assert(st.appendBatch(Seq(("e:b", label, "b")).toDF("s", "p", "o"), batchId = 0L).isEmpty)
+    val logged = spark.read.parquet(s"$root/_snapshots")
+      .select($"snapshot_id", $"op", $"rows").as[(Long, String, Long)].collect().sortBy(_._1).toSeq
+    val files = spark.read.parquet(s"$root/data")
+    val scanned = logged.map { case (id, _, _) => files.filter($"snap" === id).count() }
+    assert(logged.map(_._3) == scanned)
+    assert(logged.map(_._3) == Seq(5L, 2L, 0L, 3L, 1L, 4L, 1L))
+    assert(logged.map(_._2) == Seq("append", "append", "append", "overwrite:label", "append",
+      "overwrite:label", "stream:0"))
+  }
+
   test("salted join equals plain join on skewed keys") {
     val big = spark.range(0, 10000).select(
       when($"id" % 100 =!= 0, $"id" % 500).otherwise(lit(7L)).as("k"), $"id".as("payload"))

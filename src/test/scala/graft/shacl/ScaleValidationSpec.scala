@@ -52,6 +52,35 @@ class ScaleValidationSpec extends AnyFunSuite {
       .limit(1).count() == 1)
   }
 
+  test("sample: empty on conforming data, min(total, sampleSize) rows otherwise") {
+    val ex = "http://ex.org/"
+    val ids = spark.range(20)
+    val types = ids.select(iriCol(concat(lit(ex + "p"), $"id")).as("s"),
+      lit(RDF.ty.value).as("p"), iriCol(lit(ex + "Person")).as("o"))
+    // the first 7 people have no name
+    val names = ids.filter($"id" >= 7).select(iriCol(concat(lit(ex + "p"), $"id")).as("s"),
+      lit(ex + "name").as("p"), litCol(concat(lit("name-"), $"id")).as("o"))
+    val shapes = TurtleParser.parseGraph(
+      s"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+         |@prefix ex: <$ex> .
+         |ex:PersonShape a sh:NodeShape ; sh:targetClass ex:Person ;
+         |  sh:property [ sh:path ex:name ; sh:minCount 1 ] .
+         |""".stripMargin, "http://test/")
+    val ok = Validator.validateFrameAtScale(spark, types.unionByName(names).filter(
+      !$"s.v".isin((0 until 7).map(i => s"${ex}p$i"): _*)), shapes, sampleSize = 5)
+    assert(ok.conforms && ok.totalViolations == 0 && ok.sample.isEmpty)
+    assert(!ok.sampleText.contains("more results not shown"))
+    ok.release()
+    for (size <- Seq(5, 7, 100)) {
+      val bad = Validator.validateFrameAtScale(spark, types.unionByName(names), shapes,
+        sampleSize = size)
+      assert(!bad.conforms && bad.totalViolations == 7)
+      assert(bad.sample.size == math.min(7, size), s"sampleSize $size")
+      assert(bad.sample.map(_.focus).distinct.size == bad.sample.size)
+      bad.release()
+    }
+  }
+
   test("report triples emit distributed and land in a TripleStore") {
     val n = 100000L
     val ex = "http://ex.org/"
