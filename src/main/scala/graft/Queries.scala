@@ -246,8 +246,7 @@ object Queries {
       .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
 
   /** Exact n-gram Jaccard join via the df-capped inverted index (fully
-    * SQL-expressible -> DuckDB-oracled; the LSH-candidate verify variant
-    * stays covered by OpsSpec recall tests). */
+    * SQL-expressible -> DuckDB-oracled). */
   val qNgramJaccard: Q = (s, d) =>
     Dedup.ngramJaccardJoin(t(s, d, "documents"), "doc_id", "text")
 

@@ -1,9 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `java.lang.String.hashCode` of a string column as a Catalyst
@@ -13,9 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * mapPartitions/encoder round trip (guide §4: keep per-row scalar work
   * out of opaque closures). One call per row; values are bit-identical to
   * the closure's by construction. */
-case class JavaStringHash(child: Expression) extends UnaryExpression {
+case class JavaStringHash(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_java_hash"
+  override def inputTypes = Seq(StringType)
 
   override def nullSafeEval(a: Any): Any =
     a.asInstanceOf[UTF8String].toString.hashCode
@@ -25,22 +25,4 @@ case class JavaStringHash(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object JavaStringHash {
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_java_hash` with the session (idempotent — same
-    * scheme as ops.ArrayDotProduct.ensure). */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_java_hash",
-      { children =>
-        require(children.size == 1, "graft_java_hash takes exactly 1 argument")
-        JavaStringHash(children.head)
-      },
-      "built-in")
-    registeredFor.put(spark, ())
-  }
 }

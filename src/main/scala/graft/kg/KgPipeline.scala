@@ -4,6 +4,7 @@ import graft.rdf.{Iri, MemGraph, TurtleParser}
 import graft.shacl.{ValidationOptions, Validator}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.KernelColumn
 
 /** The north-rule KG-construction pipeline:
   * docs -> span tagging -> mention detection -> batched entity-link
@@ -48,9 +49,8 @@ object KgPipeline {
     * long/double arithmetic mirrors score() operation for operation. */
   def linkEntities(spark: SparkSession, mentions: DataFrame): Dataset[Link] = {
     import spark.implicits._
-    JavaStringHash.ensure(spark)
-    val dh = call_function("graft_java_hash", $"doc_id").cast("long")
-    val sh = call_function("graft_java_hash", $"surface").cast("long")
+    val dh = KernelColumn(JavaStringHash(KernelColumn.expr($"doc_id"))).cast("long")
+    val sh = KernelColumn(JavaStringHash(KernelColumn.expr($"surface"))).cast("long")
     val h = (dh * 31L + sh).bitwiseAND(lit(0x7fffffffL))
     mentions.select(
       $"doc_id",

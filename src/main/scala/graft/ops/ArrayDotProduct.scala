@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.graft.KernelColumn
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst dot product over two float-array columns.
   *
@@ -22,17 +23,13 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true // ragged inputs yield null
   override def prettyName: String = "graft_dot"
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelColumn.checkFloatOrDoubleArrays(children)
 
   // element accessors per side: float arrays and double arrays are both
   // common (Spark float arithmetic promotes transform() outputs to
   // double) — reading a double array with getFloat returns garbage, so
   // the width must follow the analyzed element type
-  private def elemIsDouble(e: Expression): Boolean = e.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case ArrayType(FloatType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"graft_dot expects array<float|double>, got $other")
-  }
   private lazy val leftDouble = elemIsDouble(left)
   private lazy val rightDouble = elemIsDouble(right)
 
@@ -77,26 +74,4 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object ArrayDotProduct {
-  // WeakHashMap keyed by the session itself: identityHashCode can collide
-  // across distinct sessions (leaving one unregistered) and dead-session
-  // ids would accumulate forever; weak keys free entries with the session.
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_dot` with the session's function registry (idempotent
-    * per session) so Column pipelines can reach the expression through
-    * call_function without private Column constructors. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      { children =>
-        require(children.size == 2, "graft_dot takes exactly 2 arguments")
-        ArrayDotProduct(children.head, children(1))
-      },
-      "built-in")
-    registeredFor.put(spark, ())
-  }
 }

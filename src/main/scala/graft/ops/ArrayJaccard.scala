@@ -3,8 +3,7 @@ package graft.ops
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.util.Arrays
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -33,18 +32,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * in the intersection iff present in both sides) — unreachable from
   * graft_shingle_hashes output, but exact anyway. */
 case class ArrayJaccard(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_jaccard"
-
-  Seq(left, right).foreach { e =>
-    e.dataType match {
-      case ArrayType(LongType, _) => ()
-      case other => throw new IllegalArgumentException(
-        s"graft_jaccard expects array<bigint>, got $other")
-    }
-  }
+  override def inputTypes =
+    Seq(ArrayType(LongType), ArrayType(LongType))
 
   override def nullSafeEval(a: Any, b: Any): Any =
     ArrayJaccard.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -105,23 +98,5 @@ object ArrayJaccard {
     val denom = math.max(union, 1L)
     JBigDecimal.valueOf(inter.toDouble / denom.toDouble)
       .setScale(4, RoundingMode.HALF_UP).doubleValue()
-  }
-
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_jaccard(a, b)` with the session's function registry,
-    * idempotent per session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard",
-      { children =>
-        require(children.size == 2, "graft_jaccard takes exactly 2 arguments")
-        ArrayJaccard(children.head, children(1))
-      },
-      "built-in")
-    registeredFor.put(spark, ())
   }
 }

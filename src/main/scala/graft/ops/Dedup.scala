@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.KernelColumn
 
 /** Deduplication operators for web-scale corpora.
   *
@@ -19,16 +20,6 @@ object Dedup {
     docs.groupBy(TextOps.fingerprint(col(textCol)).as("fp"))
       .agg(count(lit(1)).as("cnt"), sort_array(collect_list(col(idCol))).as("ids"))
       .filter(col("cnt") > 1)
-
-  /** Word k-shingles as an array column (codegen'd, no UDF). */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    filter(
-      transform(toks, (_, i) =>
-        when(i <= size(toks) - k,
-          array_join(slice(toks, i + lit(1), lit(k)), " "))),
-      x => x.isNotNull)
-  }
 
   /** Portable MinHash signature table: the shingle hash is md5-derived
     * (h1 = 60 bits, h2 = 60 bits mod P) and permutation i is the
@@ -54,12 +45,10 @@ object Dedup {
     // md5+min loop TWICE per row (guide §4.4 duplication; the r8 sig-plan
     // audit caught it as a Filter(isnotnull(graft_...)) under the
     // exchange). With the guard, the signature can never be null.
-    MinHashSig.ensure(docs.sparkSession)
     widen(docs)
       .filter(size(split(lower(trim(col(textCol))), "\\s+")) >= 3)
-      .select(col(idCol).as("id"),
-        call_function("graft_minhash_sig",
-          split(lower(trim(col(textCol))), "\\s+"), lit(3), lit(n)).as("sig"))
+      .select(col(idCol).as("id"), KernelColumn(MinHashSig(
+        KernelColumn.expr(split(lower(trim(col(textCol))), "\\s+")), 3, n)).as("sig"))
   }
 
   /** MinHash+LSH near-duplicate candidate pairs over the portable
@@ -111,11 +100,9 @@ object Dedup {
     * substituting (and double-evaluating) the expression below widen()'s
     * exchange (guide §4.4). */
   def simhashSigPortable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    SimHash64.ensure(docs.sparkSession)
     widen(docs).filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        call_function("graft_simhash64",
-          split(lower(trim(col(textCol))), "\\s+")).as("sh"))
+      .select(col(idCol).as("id"), KernelColumn(SimHash64(
+        KernelColumn.expr(split(lower(trim(col(textCol))), "\\s+")))).as("sh"))
   }
 
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -184,48 +171,21 @@ object Dedup {
   }
 
   /** Embedding-cosine near-duplicate pairs, EXACT baseline: every (a < b)
-    * pair with round(cosine, 4) >= threshold. Quadratic by design — the
-    * correctness oracle for [[embeddingNearDupLsh]]; rounding before the
-    * threshold keeps the boundary deterministic across engines. */
+    * pair with round(cosine, 4) >= threshold (q_embed_neardup). Quadratic
+    * by design; rounding before the threshold keeps the boundary
+    * deterministic across engines. */
   def embeddingNearDupExact(docs: DataFrame, idCol: String, vecCol: String,
                             threshold: Double): DataFrame = {
     // norms precomputed per row (N aggregate passes) instead of per pair
     // (N^2 passes); the division order matches cosine() exactly, so the
     // rounded values are bit-identical to the naive form and the DuckDB
     // oracle. 33 s -> ~3 s on the sf0.1 benchmark table.
-    ArrayDotProduct.ensure(docs.sparkSession)
     val wd = widen(docs) // both cross-join sides, or half the norms serialize
     val a = wd.select(col(idCol).as("a_id"), col(vecCol).as("a_vec"),
       Similarity.nrm(col(vecCol)).as("a_nrm"))
     val b = wd.select(col(idCol).as("b_id"), col(vecCol).as("b_vec"),
       Similarity.nrm(col(vecCol)).as("b_nrm"))
     a.crossJoin(b).filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(Similarity.cosinePre(col("a_vec"), col("b_vec"),
-          col("a_nrm"), col("b_nrm")), 4).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** Embedding-cosine near-dup, scale path: random-hyperplane LSH bucket
-    * join bounds the candidate pairs (never all-pairs); exact cosine
-    * verifies only inside candidates. Defaults tuned for the NEAR-DUP
-    * regime (cos >= ~0.9): per-bit collision p = 1 - θ/π ≈ 0.86, so
-    * 8-bit/8-table banding gives recall ≈ 0.94 at cos 0.9 and ≈ 0.999 at
-    * cos 0.98; it is NOT a low-threshold similarity join (RHP recall
-    * collapses below ~0.8 — use a coarser quantizer there). */
-  def embeddingNearDupLsh(docs: DataFrame, idCol: String, vecCol: String,
-                          threshold: Double, bits: Int = 8, tables: Int = 8): DataFrame = {
-    ArrayDotProduct.ensure(docs.sparkSession)
-    val sig = Similarity.rhpSigTable(docs, idCol, vecCol, bits, tables)
-    val a = sig.select(col("id").as("a_id"), col("tbl"), col("sig"))
-    val b = sig.select(col("id").as("b_id"), col("tbl"), col("sig"))
-    val cand = a.join(b, Seq("tbl", "sig")).filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct() // pairs collide in many tables
-    val va = docs.select(col(idCol).as("a_id"), col(vecCol).as("a_vec"),
-      Similarity.nrm(col(vecCol)).as("a_nrm"))
-    val vb = docs.select(col(idCol).as("b_id"), col(vecCol).as("b_vec"),
-      Similarity.nrm(col(vecCol)).as("b_nrm"))
-    cand.join(va, "a_id").join(vb, "b_id")
       .select(col("a_id"), col("b_id"),
         round(Similarity.cosinePre(col("a_vec"), col("b_vec"),
           col("a_nrm"), col("b_nrm")), 4).as("cos"))
@@ -254,16 +214,13 @@ object Dedup {
     // sets — md5 (not xxhash64) so the DuckDB oracle recomputes the exact
     // same values (collisions: ~2^-60 per pair, and identical engines
     // would collide identically anyway)
-    ShingleHashes.ensure(docs.sparkSession)
-    ArrayJaccard.ensure(docs.sparkSession)
     // ONE compact array<long> row per doc (distinct shingle hashes, the
     // whole tokenize+shingle+md5 chain in one codegen loop), checkpointed;
     // the exploded posting view AND the per-doc verify arrays both derive
     // from it — the old shape checkpointed the EXPLODED rows and had to
     // re-group them (a full exchange) to rebuild the verify arrays
-    val hs = widen(docs).select(col(idCol).as("id"),
-      call_function("graft_shingle_hashes",
-        split(lower(trim(col(textCol))), "\\s+"), lit(k)).as("sh"))
+    val hs = widen(docs).select(col(idCol).as("id"), KernelColumn(ShingleHashes(
+        KernelColumn.expr(split(lower(trim(col(textCol))), "\\s+")), k)).as("sh"))
       .localCheckpoint()
     val sh = hs.select(col("id"), explode(col("sh")).as("s"))
     val rare = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
@@ -330,7 +287,8 @@ object Dedup {
       .join(arr.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(arr.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        call_function("graft_jaccard", col("sh_a"), col("sh_b")).as("jaccard"))
+        KernelColumn(ArrayJaccard(KernelColumn.expr(col("sh_a")),
+          KernelColumn.expr(col("sh_b")))).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
   }
 
@@ -403,10 +361,8 @@ object Dedup {
     // values, so the DuckDB oracle is unchanged). Stride subsampling keeps
     // the same 1-based positions {1, 1+stride, ...} the old sequence()
     // emitted.
-    WindowFps.ensure(toks0.sparkSession)
     val toks = toks0.filter(size(col("tk")) >= window)
-    val wins0 = toks.select(col("id"),
-        posexplode(call_function("graft_window_fps", col("tk"), lit(window))))
+    val wins0 = toks.select(col("id"), posexplode(windowFps(window)))
       .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
         col("col").as("fp"))
     val wins = (if (stride == 1) wins0
@@ -447,6 +403,12 @@ object Dedup {
       col("n_windows"))
   }
 
+  /** Ordered window fingerprints of the frame's `tk` token column
+    * ([[WindowFps]]) — shared by substring dedup and decontamination, so
+    * both see identical window bytes and identical md5-derived values. */
+  private def windowFps(n: Int): Column =
+    KernelColumn(WindowFps(KernelColumn.expr(col("tk")), n))
+
   /** Apply [[substringDedup]]'s spans: the REMOVAL half of substring dedup
     * (detection alone cleans nothing). Keep-one policy: a span's copy in
     * the lower doc id survives; the higher doc id (`id_b` — always the
@@ -467,30 +429,8 @@ object Dedup {
     val spans = substringDedup(docs, idCol, textCol, window, stride, maxDf)
     val toks = widen(docs).select(col(idCol).as("id"),
       split(lower(trim(col(textCol))), "\\s+").as("tk"))
-    applyCuts(spans, toks)
-      .select(col("id"), array_join(col("kept"), " ").as("text_clean"),
-        (size(col("tk")) - size(col("kept"))).cast("long").as("n_cut"))
-  }
-
-  /** Pre-tokenized twin of [[substringDedupClean]]: spans detected over
-    * the token-id windows, cuts applied positionally to the ORIGINAL
-    * array, so the cleaned column keeps the caller's element type
-    * (array<long> ids in, array<long> ids out). Returns
-    * (id, tokens_clean, n_cut). */
-  def substringDedupCleanTokens(docs: DataFrame, idCol: String, tokCol: String,
-                                window: Int = 20, stride: Int = 1,
-                                maxDf: Int = 20): DataFrame = {
-    val spans = substringDedupTokens(docs, idCol, tokCol, window, stride, maxDf)
-    val toks = widen(docs).select(col(idCol).as("id"), col(tokCol).as("tk"))
-    applyCuts(spans, toks)
-      .select(col("id"), col("kept").as("tokens_clean"),
-        (size(col("tk")) - size(col("kept"))).cast("long").as("n_cut"))
-  }
-
-  /** Keep-one cut application shared by both clean variants: union the
-    * [b_start, b_end) spans per losing doc and drop covered tokens in one
-    * codegen'd transform+filter pass. Returns (id, tk, kept). */
-  private def applyCuts(spans: DataFrame, toks: DataFrame): DataFrame = {
+    // union the [b_start, b_end) spans per losing doc and drop covered
+    // tokens in one codegen'd transform+filter pass
     val cuts = spans.groupBy(col("id_b").as("id"))
       .agg(collect_list(struct(col("b_start").as("cs"), col("b_end").as("ce"))).as("cuts"))
     toks.join(cuts, Seq("id"), "left")
@@ -501,6 +441,8 @@ object Dedup {
               exists(col("cuts"), c => (i + 1) >= c("cs") && (i + 1) < c("ce")),
               lit(null)).otherwise(t)),
           x => x.isNotNull).as("kept"))
+      .select(col("id"), array_join(col("kept"), " ").as("text_clean"),
+        (size(col("tk")) - size(col("kept"))).cast("long").as("n_cut"))
   }
 
   /** Benchmark decontamination: flag training documents that share any
@@ -549,10 +491,9 @@ object Dedup {
     require(n >= 2, s"window must be >= 2 tokens (got $n)")
     // same codegen'd window-fingerprint loop as substringDedupCore —
     // identical window bytes, identical md5-derived values
-    WindowFps.ensure(docsTk.sparkSession)
     def wins(df: DataFrame) =
       df.filter(size(col("tk")) >= n)
-        .select(col("id"), posexplode(call_function("graft_window_fps", col("tk"), lit(n))))
+        .select(col("id"), posexplode(windowFps(n)))
         .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
           col("col").as("fp"))
     val b = wins(benchTk)
@@ -587,18 +528,5 @@ object Dedup {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     graft.kg.ConnectedComponents.run(docs.sparkSession, edges)
       .select(col("id"), col("component").as("canon"))
-  }
-
-  /** Exact n-gram Jaccard similarity for a candidate pair set (verify step
-    * after LSH): explode-join-count, set semantics. */
-  def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
-                   candidates: DataFrame, k: Int = 3): DataFrame = {
-    val sh = docs.select(col(idCol).as("id"),
-      array_distinct(shingles(col(textCol), k)).as("sh"))
-    val withA = candidates.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-    val withB = withA.join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-    withB.select(col("id_a"), col("id_b"),
-      round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        greatest(size(array_union(col("sh_a"), col("sh_b"))), lit(1)), 4).as("jaccard"))
   }
 }

@@ -2,11 +2,12 @@ package graft.ops
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.graft.KernelColumn
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** The `nprobe` nearest IVF cells of an embedding (array<float|double> in,
   * array<int> cell ids out), in ONE pass per row inside whole-stage
@@ -39,17 +40,14 @@ case class IvfCells(child: Expression, cells: Array[Int],
   require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_ivf_cells"
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelColumn.checkFloatOrDoubleArrays(children)
 
-  private lazy val elemIsDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case ArrayType(FloatType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"graft_ivf_cells expects array<float|double>, got $other")
-  }
+  private lazy val isDouble: Boolean = elemIsDouble(child)
 
   override def nullSafeEval(a: Any): Any =
     IvfCells.compute(a.asInstanceOf[ArrayData], cells, cvecs, cnrms,
-      nprobe, roundCos, elemIsDouble)
+      nprobe, roundCos, isDouble)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // centroid data published through a codegen object reference — the
@@ -59,7 +57,7 @@ case class IvfCells(child: Expression, cells: Array[Int],
     val cnrmsRef = ctx.addReferenceObj("ivfCnrms", cnrms, "double[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"""${ev.value} = graft.ops.IvfCells.compute($c, $cellsRef, $cvecsRef,
-         |  $cnrmsRef, $nprobe, $roundCos, $elemIsDouble);""".stripMargin)
+         |  $cnrmsRef, $nprobe, $roundCos, $isDouble);""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -67,56 +65,6 @@ case class IvfCells(child: Expression, cells: Array[Int],
 }
 
 object IvfCells {
-
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_ivf_cells(vec, cells, cvecs, cnrms, nprobe, roundCos)`
-    * — every argument after `vec` must be a (typed) literal; the centroid
-    * payloads are unwrapped at expression-construction time so the plan
-    * carries plain case-class fields, not literal trees. Idempotent per
-    * session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ivf_cells",
-      { children =>
-        require(children.size == 6, "graft_ivf_cells takes exactly 6 arguments")
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.catalyst.util.{ArrayData => AD}
-        import org.apache.spark.sql.types.{ArrayType => AT, BooleanType, DoubleType => DT, FloatType => FT, IntegerType => IT}
-        val cells = children(1) match {
-          case Literal(v: AD, AT(IT, _)) => v.toIntArray()
-          case other => throw new IllegalArgumentException(
-            s"graft_ivf_cells cells must be an array<int> literal, got $other")
-        }
-        val cvecs = children(2) match {
-          case Literal(v: AD, AT(AT(FT, _), _)) =>
-            Array.tabulate(v.numElements())(i => v.getArray(i).toFloatArray())
-          case other => throw new IllegalArgumentException(
-            s"graft_ivf_cells cvecs must be an array<array<float>> literal, got $other")
-        }
-        val cnrms = children(3) match {
-          case Literal(v: AD, AT(DT, _)) => v.toDoubleArray()
-          case other => throw new IllegalArgumentException(
-            s"graft_ivf_cells cnrms must be an array<double> literal, got $other")
-        }
-        val nprobe = children(4) match {
-          case org.apache.spark.sql.catalyst.expressions.IntegerLiteral(v) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_ivf_cells nprobe must be an integer literal, got $other")
-        }
-        val roundCos = children(5) match {
-          case Literal(v: Boolean, BooleanType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_ivf_cells roundCos must be a boolean literal, got $other")
-        }
-        IvfCells(children.head, cells, cvecs, cnrms, nprobe, roundCos)
-      },
-      "built-in")
-    registeredFor.put(spark, ())
-  }
 
   /** Spark's round(x, 6) for doubles: HALF_UP on the decimal string
     * representation (BigDecimal.valueOf). */

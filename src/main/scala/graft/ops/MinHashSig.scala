@@ -2,11 +2,10 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, IntegerLiteral, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Portable MinHash signature of a token array (array<string> in,
@@ -28,12 +27,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Exists for guide §2.4/§4 reasons: the aggregate form exploded every
   * shingle (a full per-shingle exchange into the n-min groupBy); this is a
   * pure projection — the md5 per shingle is the only remaining cost. */
-case class MinHashSig(child: Expression, k: Int, n: Int) extends UnaryExpression {
+case class MinHashSig(child: Expression, k: Int, n: Int)
+  extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, s"shingle width must be >= 1 (got $k)")
   require(n >= 1, s"signature length must be >= 1 (got $n)")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true // no shingles yields null
   override def prettyName: String = "graft_minhash_sig"
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(a: Any): Any =
     MinHashSig.compute(a.asInstanceOf[ArrayData], k, n)
@@ -51,7 +52,6 @@ case class MinHashSig(child: Expression, k: Int, n: Int) extends UnaryExpression
 
 object MinHashSig {
   private val P = 2147483647L // 2^31 - 1, prime
-  private val SPACE = UTF8String.fromString(" ")
   private val mdLocal: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
@@ -67,13 +67,8 @@ object MinHashSig {
     val md = mdLocal.get()
     var i = 0
     while (i < m) {
-      var j = 0
-      while (j < k) {
-        parts(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
-        j += 1
-      }
       md.reset()
-      val h = md.digest(UTF8String.concatWs(SPACE, parts: _*).getBytes)
+      val h = md.digest(WordShingles.shingleAt(arr, i, parts).getBytes)
       // h1 = md5 hex chars 1-15 (bytes 0-6 + high nibble of byte 7),
       // h2 = chars 16-30 (low nibble of byte 7 + bytes 8-14) mod P —
       // the same `conv(substring(md5(s), ..), 16, 10)` values
@@ -94,28 +89,5 @@ object MinHashSig {
       i += 1
     }
     new GenericArrayData(mins)
-  }
-
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_minhash_sig(tokens, k, n)` (k, n integer literals)
-    * with the session's function registry, idempotent per session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
-      { children =>
-        require(children.size == 3, "graft_minhash_sig takes exactly 3 arguments")
-        val (k, n) = (children(1), children(2)) match {
-          case (IntegerLiteral(kv), IntegerLiteral(nv)) => (kv, nv)
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash_sig k and n must be integer literals, got $other")
-        }
-        MinHashSig(children.head, k, n)
-      },
-      "built-in")
-    registeredFor.put(spark, ())
   }
 }

@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-document repetition statistics (text, tokens in; one struct of
@@ -35,10 +34,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * risk), and the DuckDB q_repetition oracle recomputes the identical
   * numbers its own way (guide §2.4, §4). */
 case class RepetitionStats(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = RepetitionStats.schema
   override def nullable: Boolean = true
   override def prettyName: String = "graft_repetition_stats"
+  override def inputTypes = Seq(StringType, ArrayType(StringType))
 
   override def nullSafeEval(text: Any, toks: Any): Any =
     RepetitionStats.compute(text.asInstanceOf[UTF8String],
@@ -63,7 +63,6 @@ object RepetitionStats {
     StructField("top_c", LongType, nullable = false)))
 
   private val NL = UTF8String.fromString("\n")
-  private val SPACE = UTF8String.fromString(" ")
   private val EMPTY = UTF8String.fromString("")
 
   /** Tight line-tally + bigram-tally loop shared by interpreted eval and
@@ -98,11 +97,10 @@ object RepetitionStats {
     // bigram tallies over the caller-split token array
     val bgCounts = new java.util.HashMap[UTF8String, Array[Long]]()
     val n = toks.numElements()
+    val pair = new Array[UTF8String](2)
     i = 0
     while (i < n - 1) {
-      val a = if (toks.isNullAt(i)) null else toks.getUTF8String(i)
-      val b = if (toks.isNullAt(i + 1)) null else toks.getUTF8String(i + 1)
-      val bg = UTF8String.concatWs(SPACE, a, b)
+      val bg = WordShingles.shingleAt(toks, i, pair)
       val e = bgCounts.get(bg)
       if (e == null) bgCounts.put(bg, Array(1L)) else e(0) += 1L
       i += 1
@@ -119,23 +117,5 @@ object RepetitionStats {
     }
     new GenericInternalRow(Array[Any](distinct, total, dupChars, totalChars,
       topBg, topC))
-  }
-
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_repetition_stats(text, tokens)` with the session's
-    * function registry, idempotent per session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repetition_stats",
-      { children =>
-        require(children.size == 2, "graft_repetition_stats takes exactly 2 arguments")
-        RepetitionStats(children.head, children(1))
-      },
-      "built-in")
-    registeredFor.put(spark, ())
   }
 }

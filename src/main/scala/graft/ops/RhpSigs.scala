@@ -3,11 +3,12 @@ package graft.ops
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, IntegerLiteral, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.graft.KernelColumn
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Portable random-hyperplane signatures of an embedding (array<float|double>
   * in, array<long> of `tables` signatures out), in ONE pass per row inside
@@ -37,21 +38,18 @@ case class RhpSigs(child: Expression, bits: Int, tables: Int) extends UnaryExpre
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true // empty/null embedding yields null
   override def prettyName: String = "graft_rhp_sigs"
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelColumn.checkFloatOrDoubleArrays(children)
 
-  private lazy val elemIsDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case ArrayType(FloatType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"graft_rhp_sigs expects array<float|double>, got $other")
-  }
+  private lazy val isDouble: Boolean = elemIsDouble(child)
 
   override def nullSafeEval(a: Any): Any =
-    RhpSigs.compute(a.asInstanceOf[ArrayData], bits, tables, elemIsDouble)
+    RhpSigs.compute(a.asInstanceOf[ArrayData], bits, tables, isDouble)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
       s"""
-         |${ev.value} = graft.ops.RhpSigs.compute($c, $bits, $tables, $elemIsDouble);
+         |${ev.value} = graft.ops.RhpSigs.compute($c, $bits, $tables, $isDouble);
          |${ev.isNull} = (${ev.value} == null);
        """.stripMargin)
 
@@ -126,29 +124,5 @@ object RhpSigs {
       t += 1
     }
     new GenericArrayData(sigs)
-  }
-
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_rhp_sigs(vec, bits, tables)` (bits, tables integer
-    * literals) with the session's function registry, idempotent per
-    * session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rhp_sigs",
-      { children =>
-        require(children.size == 3, "graft_rhp_sigs takes exactly 3 arguments")
-        val (bits, tables) = (children(1), children(2)) match {
-          case (IntegerLiteral(bv), IntegerLiteral(tv)) => (bv, tv)
-          case other => throw new IllegalArgumentException(
-            s"graft_rhp_sigs bits and tables must be integer literals, got $other")
-        }
-        RhpSigs(children.head, bits, tables)
-      },
-      "built-in")
-    registeredFor.put(spark, ())
   }
 }

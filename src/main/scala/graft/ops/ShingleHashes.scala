@@ -2,11 +2,10 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, IntegerLiteral, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct 60-bit md5-derived word-shingle hashes of a token array
@@ -31,10 +30,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * loop per document, and callers that need per-doc shingle SETS (the
   * ngram verify arrays) can use it as a pure projection instead of
   * re-grouping exploded rows (guide §2.4). */
-case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
+case class ShingleHashes(child: Expression, k: Int)
+  extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, s"shingle width must be >= 1 (got $k)")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_shingle_hashes"
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(a: Any): Any =
     ShingleHashes.compute(a.asInstanceOf[ArrayData], k)
@@ -48,7 +49,6 @@ case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
 }
 
 object ShingleHashes {
-  private val SPACE = UTF8String.fromString(" ")
   private val mdLocal: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
@@ -74,12 +74,7 @@ object ShingleHashes {
     val md = mdLocal.get()
     var i = 0
     while (i < m) {
-      var j = 0
-      while (j < k) {
-        parts(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
-        j += 1
-      }
-      val s = UTF8String.concatWs(SPACE, parts: _*)
+      val s = WordShingles.shingleAt(arr, i, parts)
       if (seen.add(s)) {
         md.reset()
         out(cnt) = hash60(md.digest(s.getBytes))
@@ -88,28 +83,5 @@ object ShingleHashes {
       i += 1
     }
     new GenericArrayData(java.util.Arrays.copyOf(out, cnt))
-  }
-
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_shingle_hashes(tokens, k)` (k an integer literal)
-    * with the session's function registry, idempotent per session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_hashes",
-      { children =>
-        require(children.size == 2, "graft_shingle_hashes takes exactly 2 arguments")
-        val k = children(1) match {
-          case IntegerLiteral(kv) => kv
-          case other => throw new IllegalArgumentException(
-            s"graft_shingle_hashes width must be an integer literal, got $other")
-        }
-        ShingleHashes(children.head, k)
-      },
-      "built-in")
-    registeredFor.put(spark, ())
   }
 }

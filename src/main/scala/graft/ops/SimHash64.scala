@@ -2,11 +2,10 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** 64-bit portable simhash of a token array (array<string> in, bigint out),
   * in ONE pass per row inside whole-stage codegen.
@@ -31,10 +30,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * token occurrence (a full per-token exchange into the 64-sum groupBy);
   * this is a pure projection — the only remaining per-doc cost is the md5
   * itself, amortized through one JIT-able loop. */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true // empty token array yields null
   override def prettyName: String = "graft_simhash64"
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(a: Any): Any =
     SimHash64.compute(a.asInstanceOf[ArrayData])
@@ -94,23 +94,5 @@ object SimHash64 {
       b += 1
     }
     sh
-  }
-
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_simhash64(tokens)` with the session's function
-    * registry, idempotent per session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64",
-      { children =>
-        require(children.size == 1, "graft_simhash64 takes exactly 1 argument")
-        SimHash64(children.head)
-      },
-      "built-in")
-    registeredFor.put(spark, ())
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.KernelColumn
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -28,10 +29,9 @@ object Similarity {
     round(dot(a, b) / (greatest(norm(a), lit(1e-12)) * greatest(norm(b), lit(1e-12))), 6)
 
   /** Dot through the native [[ArrayDotProduct]] expression (codegen'd
-    * primitive loop; bit-identical fold order to dot()). Callers must have
-    * run ArrayDotProduct.ensure(spark) — every public entry here does. */
+    * primitive loop; bit-identical fold order to dot()). */
   private[ops] def dotFast(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
+    KernelColumn(ArrayDotProduct(KernelColumn.expr(a), KernelColumn.expr(b)))
 
   /** cosine() with the norms precomputed per ROW instead of per PAIR and
     * the dot via the codegen'd native expression — identical arithmetic
@@ -63,19 +63,10 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Max embedding length of a frame (0 when the frame is empty or every
-    * vector is null — downstream literal weight arrays come out empty
-    * instead of the probe throwing). One tiny driver action. */
-  private def maxDim(df: DataFrame, vecCol: String): Int = {
-    val r = df.agg(max(size(col(vecCol)))).head
-    if (r.isNullAt(0)) 0 else r.getInt(0)
-  }
-
   /** Brute-force cosine top-k: every (query, item) pair via broadcast of the
     * (small) query side, windowed rank per query. */
   def bruteForceTopK(items: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
-    ArrayDotProduct.ensure(items.sparkSession)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
       nrm(col(vecCol)).as("q_nrm"))
     val it = widen(items).select(col(idCol).as("item_id"), col(vecCol).as("item_vec"),
@@ -86,41 +77,6 @@ object Similarity {
         cosinePre(col("q_vec"), col("item_vec"), col("q_nrm"), col("item_nrm")).as("cos"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("item_id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Deterministic pseudo-uniform[-1,1] hyperplane weight for
-    * (table, bit, dim) — hash-derived, no external randomness. */
-  private def rhpWeight(table: Column, bit: Column, dim: Column): Column =
-    (pmod(xxhash64(concat(table.cast("string"), lit(":"), bit.cast("string"),
-      lit(":"), dim.cast("string"))), lit(1000L)).cast("double") / 500.0d) - 1.0d
-
-  /** Banded multi-table signatures via explode + groupBy (the simhash
-    * bit-vote trick, Dedup.scala): dimensions stream ONCE through
-    * bits×tables partial-aggregating sums instead of bits×tables re-scans
-    * of the embedding array per row (the inlined column-expression form
-    * cost q_ann_lsh 5.5 s vs 1.9 s in BENCH_r02). Serves
-    * [[Dedup.embeddingNearDupLsh]], where rows with empty/null embeddings
-    * must KEEP their id (sig 0 in every table) for candidate/diagnostic
-    * completeness — the portable twin below deliberately drops them
-    * instead. Returns (id, tbl, sig). */
-  def rhpSigTable(docs: DataFrame, idCol: String, vecCol: String,
-                  bits: Int, tables: Int): DataFrame = {
-    // posexplode_outer keeps rows with empty/null embeddings: their sums
-    // come out null -> every sign bit 0 -> signature 0 in every table,
-    // matching the column-expression form (a plain posexplode would drop
-    // the id from the signature table and silently exclude it from
-    // candidates and bucket diagnostics)
-    val dims = widen(docs).select(col(idCol).as("id"), posexplode_outer(col(vecCol)))
-      .select(col("id"), col("pos").as("d"), col("col").cast("double").as("x"))
-    val sums = for (t <- 0 until tables; b <- 0 until bits)
-      yield sum(col("x") * rhpWeight(lit(t), lit(b), col("d"))).as(s"p_${t}_$b")
-    dims.groupBy(col("id")).agg(sums.head, sums.tail: _*)
-      .select(col("id"), posexplode(array((0 until tables).map { t =>
-        (0 until bits).map(b =>
-          when(col(s"p_${t}_$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce[Column](_ bitwiseOR _)
-      }: _*)))
-      .select(col("id"), col("pos").as("tbl"), col("col").as("sig"))
   }
 
   /** Plan-time md5-derived integer hyperplane weight for (table, bit, dim):
@@ -136,23 +92,22 @@ object Similarity {
     java.lang.Long.parseLong(hex.substring(0, 15), 16) % 1001L - 500L
   }
 
-  /** Portable twin of [[rhpSigTable]]: components quantized to integers
+  /** Random-hyperplane signature table: components quantized to integers
     * (`floor(x * 2^20)` — exact in doubles, identical in any engine) and
     * integer hyperplane weights, so every projection is an EXACT int64 sum —
-    * associative, partition-order-independent (the float fast path's
-    * documented near-zero sign-bit wobble cannot happen here) and
-    * bit-identical in DuckDB. Through r8 mid-round this was posexplode +
-    * tables×bits literal-weight sum aggregates (dim-bounded typedLit
-    * arrays); now the whole quantize + project + sign loop is ONE codegen'd
-    * expression per row ([[RhpSigs]]) — a pure projection, no per-component
-    * explode, no exchange into the 48-sum aggregate, no plan-time literal
-    * arrays and no per-frame maxDim probe job (guide §2.4, §4). Values are
-    * bit-identical (OpsSpec pins the projection to the aggregate form).
-    * Empty/null embeddings are EXCLUDED like before: the twin's SQL oracle
-    * unnest drops them identically. */
+    * associative, partition-order-independent (no float sign-bit wobble
+    * under re-partitioning) and bit-identical in DuckDB. Through r8
+    * mid-round this was posexplode + tables×bits literal-weight sum
+    * aggregates (dim-bounded typedLit arrays); now the whole quantize +
+    * project + sign loop is ONE codegen'd expression per row ([[RhpSigs]])
+    * — a pure projection, no per-component explode, no exchange into the
+    * 48-sum aggregate, no plan-time literal arrays and no per-frame maxDim
+    * probe job (guide §2.4, §4). Values are bit-identical (OpsSpec pins the
+    * projection to the aggregate form). Empty/null embeddings are
+    * EXCLUDED: the SQL oracle's unnest drops them identically. Returns
+    * (id, tbl, sig). */
   def rhpSigTablePortable(docs: DataFrame, idCol: String, vecCol: String,
                           bits: Int, tables: Int): DataFrame = {
-    RhpSigs.ensure(docs.sparkSession)
     // empty/null-vec guard on the CHEAP source column (size), not on the
     // computed sigs — a sigs.isNotNull filter gets pushed below widen()'s
     // exchange with the expression substituted in, running the projection
@@ -162,11 +117,14 @@ object Similarity {
     // double-evaluation through the back door (caught in the r8 sig-plan
     // audit); with the guard the outer form emits identical rows.
     widen(docs).filter(size(col(vecCol)) > 0)
-      .select(col(idCol).as("id"),
-        call_function("graft_rhp_sigs", col(vecCol), lit(bits), lit(tables)).as("sigs"))
+      .select(col(idCol).as("id"), rhpSigs(col(vecCol), bits, tables).as("sigs"))
       .select(col("id"), posexplode_outer(col("sigs")))
       .select(col("id"), col("pos").as("tbl"), col("col").as("sig"))
   }
+
+  /** The [[RhpSigs]] signature array of an embedding column. */
+  private def rhpSigs(vec: Column, bits: Int, tables: Int): Column =
+    KernelColumn(RhpSigs(KernelColumn.expr(vec), bits, tables))
 
   /** Banded multi-table LSH ANN over the portable integer signatures:
     * `tables` independent `bits`-bit signature tables; a (query, item) pair
@@ -188,15 +146,13 @@ object Similarity {
     * [[rhpSigTablePortable]]). */
   def lshTopKPortable(items: DataFrame, queries: DataFrame, idCol: String,
                       vecCol: String, k: Int, bits: Int = 12, tables: Int = 4): DataFrame = {
-    ArrayDotProduct.ensure(items.sparkSession)
-    RhpSigs.ensure(items.sparkSession)
     def side(df: DataFrame, pfx: String): DataFrame =
       // empty-vec guard on size() + posexplode_outer, not sigs.isNotNull —
       // see rhpSigTablePortable (guide §4.4 duplication, both doors)
       widen(df).filter(size(col(vecCol)) > 0)
         .select(col(idCol).as(s"${pfx}_id"), col(vecCol).as(s"${pfx}_vec"),
           nrm(col(vecCol)).as(s"${pfx}_nrm"),
-          call_function("graft_rhp_sigs", col(vecCol), lit(bits), lit(tables)).as("sigs"))
+          rhpSigs(col(vecCol), bits, tables).as("sigs"))
         .select(col(s"${pfx}_id"), col(s"${pfx}_vec"), col(s"${pfx}_nrm"),
           posexplode_outer(col("sigs")))
         .select(col(s"${pfx}_id"), col(s"${pfx}_vec"), col(s"${pfx}_nrm"),
@@ -249,13 +205,12 @@ object Similarity {
   private def assignCellsLocal(df: DataFrame, local: Array[(Int, Array[Float])],
                                idCol: String, vecCol: String, nprobe: Int,
                                roundCos: Boolean = false): DataFrame = {
-    IvfCells.ensure(df.sparkSession)
     val cnrms = local.map { case (_, vec) =>
       math.max(math.sqrt(vec.map(x => x.toDouble * x.toDouble).sum), 1e-12) }
+    val cells = IvfCells(KernelColumn.expr(col(vecCol)), local.map(_._1), local.map(_._2),
+      cnrms, nprobe, roundCos)
     widen(df).select(col(idCol), col(vecCol).as("__vec"),
-        explode(call_function("graft_ivf_cells", col(vecCol),
-          typedLit(local.map(_._1)), typedLit(local.map(_._2)), typedLit(cnrms),
-          lit(nprobe), lit(roundCos))).as("cell"))
+        explode(KernelColumn(cells)).as("cell"))
       .select(col(idCol), col("__vec"), col("cell"))
   }
 
@@ -283,7 +238,6 @@ object Similarity {
   def ivfTopKPortable(items: DataFrame, queries: DataFrame, idCol: String,
                       vecCol: String, k: Int, nlist: Int = 64, nprobe: Int = 16,
                       itemProbe: Int = 4): DataFrame = {
-    ArrayDotProduct.ensure(items.sparkSession)
     val cents = collectCents(ivfCentroidsPortable(items, idCol, vecCol, nlist))
     val it = assignCellsLocal(items.filter(size(col(vecCol)) > 0), cents,
         idCol, vecCol, nprobe = itemProbe, roundCos = true)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.KernelColumn
 
 /** Text-analysis operators for large-scale training-data pipelines.
   * All pure `functions._` expressions (whole-stage codegen, no UDFs) so
@@ -16,14 +17,8 @@ object TextOps {
     when(length(trim(text)) === 0, lit(0))
       .otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish subword estimate: words + digit runs + punctuation clusters
-    * (a cheap deterministic proxy for tokenizer counts). */
-  def subwordCount(text: Column): Column =
-    tokenCount(text) +
-      size(regexp_extract_all(text, lit("[0-9]{2,}|[^a-zA-Z0-9\\s]{2,}"), lit(0)))
-
-  /** Quality scoring: length, punctuation ratio, stopword ratio, mean word
-    * length — the usual pretraining heuristics, rounded for stable compare. */
+  /** Quality heuristics: punctuation ratio, stopword ratio, mean word
+    * length — the usual pretraining signals, rounded for stable compare. */
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it", "le", "la",
     "el", "der", "die", "und", "et", "de", "y", "que")
 
@@ -42,10 +37,6 @@ object TextOps {
     round(length(regexp_replace(text, "\\s+", "")).cast("double") /
       greatest(size(toks), lit(1)), 4)
   }
-
-  def qualityScore(text: Column): Column =
-    round(least(length(text).cast("double") / 500.0, lit(1.0)) * 0.4 +
-      (lit(1.0) - punctRatio(text)) * 0.3 + stopwordRatio(text) * 0.3, 4)
 
   /** n-gram-heuristic language id over a tiny stopword table; returns the
     * language whose markers hit most (deterministic tie-break by order). */
@@ -82,9 +73,11 @@ object TextOps {
   /** Duplicate word-trigram fraction (Gopher/RefinedWeb-style repetition
     * signal): 1 - distinct/total over the doc's word 3-grams; 0 when the
     * doc has fewer than 3 tokens. Boilerplate-heavy and degenerate
-    * (looping) documents score high. */
+    * (looping) documents score high. The trigrams are [[WordShingles]]
+    * over the lowercased, trimmed, whitespace-split text. */
   def dupTrigramFraction(text: Column): Column = {
-    val sh = Dedup.shingles(text)
+    val sh = KernelColumn(WordShingles(
+      KernelColumn.expr(split(lower(trim(text)), "\\s+")), 3))
     when(size(sh) < 1, lit(0.0d))
       .otherwise(round(lit(1.0d) -
         size(array_distinct(sh)).cast("double") / size(sh), 4))
@@ -144,11 +137,10 @@ object TextOps {
     // with no non-empty lines had no lineAgg row (fracs coalesced to 0.0),
     // a doc with no bigram had no topBigram row ("" / 0.0), and a null
     // text produced a base row whose branches all came up empty.
-    RepetitionStats.ensure(docs.sparkSession)
     widen(docs).select(col(idCol).as("id"),
         length(regexp_replace(col(textCol), "\\s", "")).as("nw"),
-        call_function("graft_repetition_stats", col(textCol),
-          split(lower(trim(col(textCol))), "\\s+")).as("st"))
+        KernelColumn(RepetitionStats(KernelColumn.expr(col(textCol)),
+          KernelColumn.expr(split(lower(trim(col(textCol))), "\\s+")))).as("st"))
       .select(col("id"),
         when(col("st.total_lines") > 0,
           round(lit(1.0d) - col("st.distinct_lines").cast("double") / col("st.total_lines"), 4))

@@ -2,11 +2,10 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, IntegerLiteral, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Ordered 60-bit md5-derived sliding-window fingerprints of a token array
@@ -22,10 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * exploded window row (the shingle string materialized by WordShingles
   * only to be immediately re-read and hashed); here the hash happens while
   * the window string is still in hand, one JIT-able loop per document. */
-case class WindowFps(child: Expression, n: Int) extends UnaryExpression {
+case class WindowFps(child: Expression, n: Int)
+  extends UnaryExpression with ExpectsInputTypes {
   require(n >= 1, s"window width must be >= 1 (got $n)")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_window_fps"
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(a: Any): Any =
     WindowFps.compute(a.asInstanceOf[ArrayData], n)
@@ -39,7 +40,6 @@ case class WindowFps(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object WindowFps {
-  private val SPACE = UTF8String.fromString(" ")
   private val mdLocal: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
@@ -53,13 +53,8 @@ object WindowFps {
     val md = mdLocal.get()
     var i = 0
     while (i < m) {
-      var j = 0
-      while (j < n) {
-        parts(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
-        j += 1
-      }
       md.reset()
-      val h = md.digest(UTF8String.concatWs(SPACE, parts: _*).getBytes)
+      val h = md.digest(WordShingles.shingleAt(arr, i, parts).getBytes)
       // first 15 md5 hex chars as a 60-bit long: bytes 0-6 + high nibble
       // of byte 7 — `conv(substring(md5(s), 1, 15), 16, 10)`
       var v = 0L
@@ -69,28 +64,5 @@ object WindowFps {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_window_fps(tokens, n)` (n an integer literal) with
-    * the session's function registry, idempotent per session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_window_fps",
-      { children =>
-        require(children.size == 2, "graft_window_fps takes exactly 2 arguments")
-        val n = children(1) match {
-          case IntegerLiteral(nv) => nv
-          case other => throw new IllegalArgumentException(
-            s"graft_window_fps width must be an integer literal, got $other")
-        }
-        WindowFps(children.head, n)
-      },
-      "built-in")
-    registeredFor.put(spark, ())
   }
 }

@@ -1,18 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Word k-gram shingle array over a token array (array<string> in,
   * array<string> out): element i = the k tokens starting at i joined with
   * a single space — exactly `array_join(slice(toks, i+1, k), " ")` for
-  * i in 0..n-k, i.e. what [[Dedup.shingles]]'s higher-order
-  * transform/slice/array_join chain produces, null tokens skipped by the
-  * join the same way array_join skips them.
+  * i in 0..n-k, i.e. what the higher-order transform/slice/array_join
+  * chain it replaced produced, null tokens skipped by the join the same
+  * way array_join skips them. It is the one shingle implementation:
+  * [[TextOps.dupTrigramFraction]] and the OpsSpec pins build on it, and
+  * the hash kernels emit the same space-joined window bytes.
   *
   * Exists for guide §4 reasons: Spark evaluates higher-order-function
   * lambdas interpreted, per element, and the HOF chain allocates a slice
@@ -23,10 +24,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * JIT-able JVM code. Output strings are byte-identical, so every
   * md5-derived fingerprint downstream (and the DuckDB oracle) is
   * unchanged. */
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, k: Int)
+  extends UnaryExpression with ExpectsInputTypes {
   require(k >= 1, s"shingle width must be >= 1 (got $k)")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_shingles"
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(a: Any): Any =
     WordShingles.compute(a.asInstanceOf[ArrayData], k)
@@ -51,37 +54,23 @@ object WordShingles {
     val parts = new Array[UTF8String](k)
     var i = 0
     while (i < m) {
-      var j = 0
-      while (j < k) {
-        parts(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
-        j += 1
-      }
-      out(i) = UTF8String.concatWs(SPACE, parts: _*)
+      out(i) = shingleAt(arr, i, parts)
       i += 1
     }
     new GenericArrayData(out)
   }
 
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_shingles(tokens, k)` (k must be an integer literal)
-    * with the session's function registry, idempotent per session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      { children =>
-        require(children.size == 2, "graft_shingles takes exactly 2 arguments")
-        val k = children(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_shingles width must be an integer literal, got $other")
-        }
-        WordShingles(children.head, k)
-      },
-      "built-in")
-    registeredFor.put(spark, ())
+  /** The `parts.length`-token shingle starting at token `i`, joined with
+    * single spaces, null tokens skipped (UTF8String.concatWs, as array_join
+    * skips them). `parts` is scratch space the caller reuses across calls.
+    * Every shingle, window and bigram kernel builds its strings here, so
+    * their bytes (and the md5 values derived from them) agree. */
+  def shingleAt(arr: ArrayData, i: Int, parts: Array[UTF8String]): UTF8String = {
+    var j = 0
+    while (j < parts.length) {
+      parts(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
+      j += 1
+    }
+    UTF8String.concatWs(SPACE, parts: _*)
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Shared helpers for the ops tier. */
 package object ops {
@@ -35,5 +37,13 @@ package object ops {
       val target = df.sparkSession.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions < target) df.repartition(target) else df
     }
+  }
+
+  /** Element width of an analyzed array<float|double> kernel child:
+    * reading a double array with getFloat returns garbage, so kernels pick
+    * their accessor from this. */
+  private[ops] def elemIsDouble(e: Expression): Boolean = e.dataType match {
+    case ArrayType(DoubleType, _) => true
+    case _ => false
   }
 }

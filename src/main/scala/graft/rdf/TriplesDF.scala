@@ -1,6 +1,7 @@
 package graft.rdf
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -178,53 +179,47 @@ object TriplesDF {
   }
 }
 
-/** Scalar kernels used inside DataFrame plans. Registered once per session.
+/** Scalar kernels used inside DataFrame plans, as UDF values applied
+  * directly; `withName` keeps each one's SQL name in plans and in
+  * generated column names.
   * Semantics: SPARQL-operator comparison (rdfutil/compare.py:179-203) and
   * XSD well-formedness (value_constraints.py:219-267). */
 object Kernels {
-  // keyed by the session itself (weak): identityHashCode can collide across
-  // distinct sessions and dead ids accumulate — same fix as ArrayDotProduct
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
+  /** cmp(value term fields, constant literal fields) -> Int or null */
+  val rdfCmp: UserDefinedFunction = udf(
+    (vv: String, vk: Byte, vdt: String, vlang: String,
+     blex: String, bdt: String, blang: String) => {
+      if (vk != 2) null
+      else LitCompare.compare(Lit(vv, vdt, vlang), Lit(blex, bdt, blang))
+        .map(Integer.valueOf).orNull
+    }).withName("rdf_cmp")
 
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    locally {
-      // cmp(value term fields, constant literal fields) -> Int or null
-      spark.udf.register("rdf_cmp",
-        (vv: String, vk: Byte, vdt: String, vlang: String,
-         blex: String, bdt: String, blang: String) => {
-          if (vk != 2) null
-          else LitCompare.compare(Lit(vv, vdt, vlang), Lit(blex, bdt, blang))
-            .map(Integer.valueOf).orNull
-        })
-      // well-formedness of a lexical form for a datatype
-      spark.udf.register("rdf_well_typed",
-        (lex: String, dt: String) => XsdLexical.isValid(lex, dt))
-      // sh:lessThan pair check -> true when the pair VIOLATES
-      // (string/non-string mix, incomparable, or not strictly less) —
-      // property_pair_constraints.py:347-380
-      spark.udf.register("rdf_lt_violates",
-        (vv: String, vk: Byte, vdt: String, vlang: String,
-         cv: String, ck: Byte, cdt: String, clang: String, orEquals: Boolean) => {
-          def isStringy(k: Byte, dt: String, lang: String): Boolean =
-            k == 0 || (k == 2 && (dt.isEmpty || dt == XSD.string || lang.nonEmpty))
-          if (vk == 1 || ck == 1) true // BNode: reference raises; we report
-          else {
-            val vs = isStringy(vk, vdt, vlang)
-            val cs = isStringy(ck, cdt, clang)
-            if (vs != cs) true
-            else if (vs) {
-              val a = vv; val b = cv
-              if (orEquals) !(a <= b) else !(a < b)
-            } else {
-              LitCompare.compare(Lit(vv, vdt, vlang), Lit(cv, cdt, clang)) match {
-                case Some(c) => if (orEquals) c > 0 else c >= 0
-                case None => true
-              }
-            }
+  /** well-formedness of a lexical form for a datatype */
+  val rdfWellTyped: UserDefinedFunction = udf(
+    (lex: String, dt: String) => XsdLexical.isValid(lex, dt)).withName("rdf_well_typed")
+
+  /** sh:lessThan pair check -> true when the pair VIOLATES
+    * (string/non-string mix, incomparable, or not strictly less) —
+    * property_pair_constraints.py:347-380 */
+  val rdfLtViolates: UserDefinedFunction = udf(
+    (vv: String, vk: Byte, vdt: String, vlang: String,
+     cv: String, ck: Byte, cdt: String, clang: String, orEquals: Boolean) => {
+      def isStringy(k: Byte, dt: String, lang: String): Boolean =
+        k == 0 || (k == 2 && (dt.isEmpty || dt == XSD.string || lang.nonEmpty))
+      if (vk == 1 || ck == 1) true // BNode: reference raises; we report
+      else {
+        val vs = isStringy(vk, vdt, vlang)
+        val cs = isStringy(ck, cdt, clang)
+        if (vs != cs) true
+        else if (vs) {
+          val a = vv; val b = cv
+          if (orEquals) !(a <= b) else !(a < b)
+        } else {
+          LitCompare.compare(Lit(vv, vdt, vlang), Lit(cv, cdt, clang)) match {
+            case Some(c) => if (orEquals) c > 0 else c >= 0
+            case None => true
           }
-        })
-      registeredFor.put(spark, ())
-    }
-  }
+        }
+      }
+    }).withName("rdf_lt_violates")
 }

@@ -56,8 +56,6 @@ final class ValidationEngine(
   import PathIR._
   import spark.implicits._
 
-  Kernels.ensure(spark)
-
   /** Compiled sh:SPARQLFunction registry (shapes-graph scoped). */
   lazy val functions: Map[Node, ShaclFnDef] = ShaclFunctions.gather(sg)
 
@@ -441,7 +439,7 @@ final class ValidationEngine(
       val dt = dtIri.value
       val vd = $"v"("dt"); val vl = $"v"("lang")
       val matches =
-        (vd === dt && vl === "" && callUDF("rdf_well_typed", $"v"("v"), lit(dt))) ||
+        (vd === dt && vl === "" && Kernels.rdfWellTyped($"v"("v"), lit(dt))) ||
           lit(dt == RDFS.LiteralC.value) ||
           (lit(dt == RDFS.Datatype.value) && vd =!= "") ||
           (lit(dt == XSD.string) && vd === "" && vl === "") ||
@@ -475,7 +473,7 @@ final class ValidationEngine(
       finish(bad, SH.MaxCountConstraintComponent, shape)
 
     case CRange(op, bound, comp) =>
-      val cmp = callUDF("rdf_cmp", $"v"("v"), $"v"("k"), $"v"("dt"), $"v"("lang"),
+      val cmp = Kernels.rdfCmp($"v"("v"), $"v"("k"), $"v"("dt"), $"v"("lang"),
         lit(bound.lex), lit(bound.dt), lit(bound.lang))
       val ok = op match {
         case -2 => cmp > 0 // minExclusive
@@ -543,7 +541,7 @@ final class ValidationEngine(
         val O = step(T0.select($"f", $"f".as("v")), PPred(p.value)).distinct()
           .select($"f".as("_of"), $"v".as("_ov"))
         val pairs = V.join(O, V("f") === O("_of")) // per-focus θ-join
-        val bad = pairs.filter(callUDF("rdf_lt_violates",
+        val bad = pairs.filter(Kernels.rdfLtViolates(
           $"v"("v"), $"v"("k"), $"v"("dt"), $"v"("lang"),
           $"_ov"("v"), $"_ov"("k"), $"_ov"("dt"), $"_ov"("lang"), lit(orEquals)))
           .select($"f", $"v")

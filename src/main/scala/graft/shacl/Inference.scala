@@ -160,6 +160,33 @@ object OwlRlInference {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(r => try r.unpersist(blocking = false) catch { case _: Throwable => () })
 
+  /** prp-trp for one transitive property: the closure of its (s, o) pairs
+    * by frontier fixpoint. Each round joins the newest pairs to the whole
+    * closure so far, so round r reaches paths of length up to 2^r. Raises
+    * (naming the property) at `maxIter` rounds rather than return a partial
+    * closure, like the engine's kleene kernel and CC's converge. */
+  private[shacl] def transitiveClosure(pairs: DataFrame, tp: String,
+                                       maxIter: Int = 50): DataFrame = {
+    import pairs.sparkSession.implicits._
+    var edges = pairs.distinct().localCheckpoint()
+    var frontier = edges
+    var n = 1L
+    var iter = 0
+    while (n > 0) {
+      if (iter == maxIter) throw new ReportableError(
+        s"owl:TransitiveProperty <$tp> closure did not converge within $maxIter rounds")
+      val e2 = frontier.select($"s".as("_fs"), $"o".as("_fo"))
+      val next = e2.join(edges.select($"s".as("_es"), $"o".as("_eo")), $"_fo" === $"_es")
+        .select($"_fs".as("s"), $"_eo".as("o")).distinct()
+        .except(edges).localCheckpoint()
+      n = next.count()
+      if (n > 0) edges = edges.unionByName(next).localCheckpoint()
+      frontier = next
+      iter += 1
+    }
+    edges
+  }
+
   def expand(spark: SparkSession, df0: DataFrame): DataFrame = {
     import spark.implicits._
     // schema harvest (small): inverseOf / equivalentClass / equivalentProperty
@@ -211,25 +238,10 @@ object OwlRlInference {
         out.filter($"p".isin(sym: _*)).select($"o".as("s"), $"p", $"s".as("o")))
     out = out.distinct().localCheckpoint()
 
-    // prp-trp: per transitive property, frontier fixpoint (bounded like the
-    // engine's kleene kernel; transitive chains are shallow in practice)
-    for (tp <- trans) {
-      var edges = out.filter($"p" === tp).select($"s", $"o").distinct().localCheckpoint()
-      var frontier = edges
-      var n = 1L
-      var iter = 0
-      while (n > 0 && iter < 50) {
-        val e2 = frontier.select($"s".as("_fs"), $"o".as("_fo"))
-        val next = e2.join(edges.select($"s".as("_es"), $"o".as("_eo")), $"_fo" === $"_es")
-          .select($"_fs".as("s"), $"_eo".as("o")).distinct()
-          .except(edges).localCheckpoint()
-        n = next.count()
-        if (n > 0) edges = edges.unionByName(next).localCheckpoint()
-        frontier = next
-        iter += 1
-      }
-      out = out.unionByName(edges.select($"s", lit(tp).as("p"), $"o")).distinct()
-    }
+    // prp-trp: per transitive property, the closure of its (s, o) pairs
+    for (tp <- trans)
+      out = out.unionByName(transitiveClosure(out.filter($"p" === tp).select($"s", $"o"), tp)
+        .select($"s", lit(tp).as("p"), $"o")).distinct()
 
     // ---- restriction / chain / functional-property schema (driver-scale)
     val extTriples = TriplesDF.collectTriples(out.filter(
@@ -594,10 +606,9 @@ object OwlRlInference {
     // (owlrl's datatype checking; the rdf_well_typed kernel already backs
     // sh:datatype). Unknown datatypes are not flagged — only lexical
     // violations of the XSD types the kernel understands.
-    Kernels.ensure(spark)
     leg("dt-not-type",
       df.filter($"o"("k") === 2 && $"o"("dt") =!= "" &&
-        !call_function("rdf_well_typed", $"o"("v"), $"o"("dt"))),
+        !Kernels.rdfWellTyped($"o"("v"), $"o"("dt"))),
       nodeK($"s"),
       concat(lit("ill-typed literal \""), $"o"("v"), lit("\"^^"), $"o"("dt")))
     // cax-dw

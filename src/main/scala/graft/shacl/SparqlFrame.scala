@@ -46,8 +46,6 @@ final class SparqlFrame(
     maxGraphLoop: Int = SparqlFrame.MaxGraphLoop) {
   import Sparql._
 
-  Kernels.ensure(spark)
-
   /** The frame BGPs currently match against (swapped inside GRAPH blocks). */
   private var activeT: DataFrame = T
 
@@ -1620,7 +1618,7 @@ final class SparqlFrame(
     val an = num(a); val bn = num(b)
     when(an.isNotNull && bn.isNotNull,
       when(an < bn, -1).when(an === bn, 0).otherwise(1))
-      .otherwise(callUDF("rdf_cmp", a("v"), a("k"), a("dt"), a("lang"), b("v"), b("dt"), b("lang")))
+      .otherwise(Kernels.rdfCmp(a("v"), a("k"), a("dt"), a("lang"), b("v"), b("dt"), b("lang")))
   }
 }
 

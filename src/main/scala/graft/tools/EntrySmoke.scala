@@ -1,14 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Replicates the driver's t1 smoke: SparkEntry.entry rows > 0. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val n = graft.SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
     spark.stop()

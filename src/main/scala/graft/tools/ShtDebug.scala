@@ -2,16 +2,12 @@ package graft.tools
 
 import graft.rdf._
 import graft.shacl._
-import org.apache.spark.sql.SparkSession
 
 /** Debug: dump actual vs expected report for one SHT fixture. */
 object ShtDebug {
   def main(args: Array[String]): Unit = {
     val file = args(0)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val base = "file://" + file
     val g = TurtleParser.parseFile(file)
     val MF = ShtSuite.MF; val SHT = ShtSuite.SHT

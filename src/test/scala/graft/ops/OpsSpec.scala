@@ -1,14 +1,18 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{AnalysisException, Column}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.KernelColumn
 import graft.TestSpark
 
 class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
   val sf = "/root/testdata/sf0.001"
+  private def kc(e: Expression): Column = KernelColumn(e)
+  private def ex(c: Column): Expression = KernelColumn.expr(c)
 
   test("exact dedup finds planted duplicates") {
     val docs = Seq((1L, "The Cat sat."), (2L, "the cat sat"), (3L, "unique text here"))
@@ -51,13 +55,6 @@ class OpsSpec extends AnyFunSuite {
       s"pairs within dist 10 missed by banding: ${missing.map(d => (d, ham(sig(0L), sig(d))))}")
   }
 
-  test("ngram jaccard: identical docs = 1.0") {
-    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f")).toDF("doc_id", "text")
-    val cands = Seq((1L, 2L)).toDF("id_a", "id_b")
-    val j = Dedup.ngramJaccard(docs, "doc_id", "text", cands).collect()(0).getAs[Double]("jaccard")
-    assert(j == 1.0)
-  }
-
   test("brute-force ANN: self-similar vector ranks first; LSH recall measured") {
     val items = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = items.filter($"vec_id" < 4)
@@ -84,14 +81,6 @@ class OpsSpec extends AnyFunSuite {
     val maxBucket = sizes.agg(max($"n")).as[Long].collect()(0)
     assert(maxBucket < total / 4,
       s"largest bucket $maxBucket of $total items — signatures are not spreading")
-    // empty embeddings keep their id in the signature table (sig 0 per
-    // table) instead of silently vanishing from candidates/diagnostics
-    val withEmpty = items.select($"vec_id", $"embedding").limit(3).unionByName(
-      spark.range(1).select(lit(999999L).as("vec_id"),
-        array().cast("array<float>").as("embedding")))
-    val sigs = Similarity.rhpSigTable(withEmpty, "vec_id", "embedding", 12, 4)
-    assert(sigs.filter($"id" === 999999L).count() == 4)
-    assert(sigs.filter($"id" === 999999L && $"sig" === 0L).count() == 4)
   }
 
   test("text ops: token count / quality / langid deterministic") {
@@ -133,7 +122,7 @@ class OpsSpec extends AnyFunSuite {
     assert(maxCell < total, s"one cell holds all $total items")
   }
 
-  test("embedding-cosine near-dup: LSH pairs = exact pairs on planted duplicates") {
+  test("embedding-cosine near-dup: exact pairs = planted duplicates") {
     val items = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id", $"embedding").orderBy($"vec_id").limit(60)
     // plant a near-identical copy of each of the first 10 vectors
@@ -147,12 +136,6 @@ class OpsSpec extends AnyFunSuite {
     // the 10 planted pairs are the only cos>=0.9 pairs among randoms
     assert(exact.size == 10)
     assert((0 until 10).forall(i => exact.exists(p => p._2 - p._1 == 100000L)))
-    val lsh = Dedup.embeddingNearDupLsh(all, "vec_id", "embedding", 0.9)
-      .select($"a_id", $"b_id").as[(Long, Long)].collect().toSet
-    // LSH never invents pairs (verify step is exact cosine) and at these
-    // defaults recalls essentially all near-identical pairs
-    assert(lsh.subsetOf(exact))
-    assert(lsh.size >= 9, s"LSH near-dup recall ${lsh.size}/10 < 9/10")
   }
 
   test("multimodal: per-partition batched decode is deterministic + frame sampling works") {
@@ -321,15 +304,6 @@ class OpsSpec extends AnyFunSuite {
     val viaText = spanSet(Dedup.substringDedup(docs, "doc_id", "text"))
     val viaTok = spanSet(Dedup.substringDedupTokens(tokDocs, "doc_id", "ids"))
     assert(viaText == viaTok && viaTok.nonEmpty)
-    // clean twin: cuts positionally identical, cleaned column keeps the
-    // caller's element type (array<long> in, array<long> out)
-    val cleanTok = Dedup.substringDedupCleanTokens(tokDocs, "doc_id", "ids")
-    assert(cleanTok.schema("tokens_clean").dataType ==
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))
-    val cutText = Dedup.substringDedupClean(docs, "doc_id", "text")
-      .select($"id", $"n_cut").as[(Long, Long)].collect().toMap
-    val cutTok = cleanTok.select($"id", $"n_cut").as[(Long, Long)].collect().toMap
-    assert(cutText == cutTok)
     // decontamination twin: same flags over the id column
     val isBench = $"doc_id" % 7 === 0
     def flags(df: org.apache.spark.sql.DataFrame) =
@@ -546,8 +520,6 @@ class OpsSpec extends AnyFunSuite {
     // the pre-r8 assignCellsLocal column pipeline, inlined as the
     // executable contract, vs the codegen expression — same cells, same
     // order semantics (cc desc via round(cos,6), ties to smaller cell)
-    ArrayDotProduct.ensure(spark)
-    IvfCells.ensure(spark)
     val items = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id", $"embedding")
     val local = Similarity.ivfCentroidsPortable(items, "vec_id", "embedding", 16)
@@ -564,7 +536,7 @@ class OpsSpec extends AnyFunSuite {
         Similarity.nrm($"embedding").as("__nrm"))
       .select($"vec_id",
         explode(slice(reverse(array_sort(transform(centArr, c => {
-          val cc = call_function("graft_dot", $"__vec", c("c_vec")) /
+          val cc = kc(ArrayDotProduct(ex($"__vec"), ex(c("c_vec")))) /
             ($"__nrm" * c("c_nrm"))
           struct(round(cc, 6).as("cc"), (-c("cell")).as("nc"))
         }))), 1, nprobe)).as("__top"))
@@ -573,9 +545,8 @@ class OpsSpec extends AnyFunSuite {
     val cnrms = local.map { case (_, vec) =>
       math.max(math.sqrt(vec.map(x => x.toDouble * x.toDouble).sum), 1e-12) }
     val got = items.select($"vec_id",
-        explode(call_function("graft_ivf_cells", $"embedding",
-          typedLit(local.map(_._1)), typedLit(local.map(_._2)), typedLit(cnrms),
-          lit(nprobe), lit(true))).as("cell"))
+        explode(kc(IvfCells(ex($"embedding"), local.map(_._1), local.map(_._2), cnrms,
+          nprobe, roundCos = true))).as("cell"))
       .as[(Long, Int)].collect().toSet
     assert(got == expected && got.nonEmpty)
   }
@@ -583,7 +554,6 @@ class OpsSpec extends AnyFunSuite {
   test("RepetitionStats projection matches the explode+groupBy+window form") {
     // the pre-r8 shape, inlined as the executable contract (the DuckDB
     // q_repetition oracle recomputes the same tallies its own way)
-    WordShingles.ensure(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", regexp_replace($"text", " line ", "\n").as("text"))
       .union(Seq(
@@ -604,8 +574,8 @@ class OpsSpec extends AnyFunSuite {
       round(sum(($"c" - 1) * $"len").cast("double") /
         greatest(sum($"c" * $"len"), lit(1L)), 4).as("dup_line_char_frac"))
     val bigramCounts = base
-      .select($"id", explode(call_function("graft_shingles",
-        split(lower(trim($"text")), "\\s+"), lit(2))).as("bg"))
+      .select($"id", explode(kc(WordShingles(
+        ex(split(lower(trim($"text")), "\\s+")), 2))).as("bg"))
       .groupBy($"id", $"bg").agg(count(lit(1)).as("c"))
     val topBigram = bigramCounts
       .withColumn("rn", row_number().over(
@@ -635,9 +605,6 @@ class OpsSpec extends AnyFunSuite {
     // hashes == array_distinct(graft_shingles) -> md5/conv per element;
     // ordered window fps == graft_shingles -> md5/conv per element
     // (what the DuckDB ngram/substring/decontaminate oracles recompute)
-    WordShingles.ensure(spark)
-    ShingleHashes.ensure(spark)
-    WindowFps.ensure(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", $"text")
       .union(Seq((900001L, ""), (900002L, "two tokens"), (900003L, "a b c"),
@@ -645,19 +612,19 @@ class OpsSpec extends AnyFunSuite {
       .select($"doc_id", split(lower(trim($"text")), "\\s+").as("tk"))
     for (k <- Seq(3, 13, 20)) {
       val expShingle = docs.select($"doc_id",
-        transform(array_distinct(call_function("graft_shingles", $"tk", lit(k))),
+        transform(array_distinct(kc(WordShingles(ex($"tk"), k))),
           s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")).as("hs"))
         .as[(Long, Seq[Long])].collect().toMap
       val gotShingle = docs.select($"doc_id",
-        call_function("graft_shingle_hashes", $"tk", lit(k)).as("hs"))
+        kc(ShingleHashes(ex($"tk"), k)).as("hs"))
         .as[(Long, Seq[Long])].collect().toMap
       assert(gotShingle == expShingle, s"shingle hashes diverge at k=$k")
       val expFps = docs.select($"doc_id",
-        transform(call_function("graft_shingles", $"tk", lit(k)),
+        transform(kc(WordShingles(ex($"tk"), k)),
           s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")).as("fps"))
         .as[(Long, Seq[Long])].collect().toMap
       val gotFps = docs.select($"doc_id",
-        call_function("graft_window_fps", $"tk", lit(k)).as("fps"))
+        kc(WindowFps(ex($"tk"), k)).as("fps"))
         .as[(Long, Seq[Long])].collect().toMap
       assert(gotFps == expFps, s"window fps diverge at k=$k")
     }
@@ -696,14 +663,13 @@ class OpsSpec extends AnyFunSuite {
     // codegen shingles -> md5 h1/h2 -> 16 Kirsch-Mitzenmacher min
     // aggregates (the DuckDB q_minhash_* oracles recompute this form)
     val P = 2147483647L
-    WordShingles.ensure(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", $"text")
       .union(Seq((900001L, ""), (900002L, "only two"),
         (900003L, "exactly three tokens"), (900004L, " pad  a b c  ")).toDF("doc_id", "text"))
     val h = docs.select($"doc_id".as("id"),
-      explode(array_distinct(call_function("graft_shingles",
-        split(lower(trim($"text")), "\\s+"), lit(3)))).as("s"))
+      explode(array_distinct(kc(WordShingles(
+        ex(split(lower(trim($"text")), "\\s+")), 3)))).as("s"))
       .select($"id", md5($"s").as("m"))
       .select($"id",
         conv(substring($"m", 1, 15), 16, 10).cast("long").as("h1"),
@@ -767,13 +733,15 @@ class OpsSpec extends AnyFunSuite {
       (1L, base),
       (2L, base + " tail"), // near-dup of 1: 28 shared of 29 union shingles
       (3L, (0 until 30).map(i => s"z$i").mkString(" ")), // unrelated
-      (4L, (0 until 30).map(i => s"z$i").mkString(" ") + " end")) // near-dup of 3
+      (4L, (0 until 30).map(i => s"z$i").mkString(" ") + " end"), // near-dup of 3
+      (5L, "a b c d e f"), (6L, "a b c d e f")) // identical docs
       .toDF("doc_id", "text")
     val got = Dedup.ngramJaccardJoin(docs, "doc_id", "text", maxDf = 10, minJaccard = 0.5)
       .select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
-    assert(got.keySet == Set((1L, 2L), (3L, 4L)))
+    assert(got.keySet == Set((1L, 2L), (3L, 4L), (5L, 6L)))
     assert(math.abs(got((1L, 2L)) - 28.0 / 29.0) < 1e-3)
+    assert(got((5L, 6L)) == 1.0)
   }
 
   test("html strip: tags/script/style/comments drop, entities decode, malformed survives") {
@@ -934,11 +902,9 @@ class OpsSpec extends AnyFunSuite {
     // stage now runs): identical round-4 value to the set-builtin chain,
     // over real shingle-hash arrays plus adversarial edges (empty/one
     // side empty, identical, disjoint, duplicates, unsorted input)
-    ArrayJaccard.ensure(spark)
-    ShingleHashes.ensure(spark)
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(split(lower(trim($"text")), "\\s+").as("tk"))
-      .select(call_function("graft_shingle_hashes", $"tk", lit(3)).as("sh"))
+      .select(kc(ShingleHashes(ex($"tk"), 3)).as("sh"))
       .limit(40).as[Seq[Long]].collect().toSeq
     val edges = Seq(Seq.empty[Long], Seq(5L), Seq(5L, 5L, 5L),
       Seq(9L, 1L, 9L, 3L), Seq(3L, 1L), Seq(Long.MinValue, Long.MaxValue, 0L))
@@ -949,19 +915,18 @@ class OpsSpec extends AnyFunSuite {
       round(size(array_intersect($"sh_a", $"sh_b")).cast("double") /
         greatest(size(array_union($"sh_a", $"sh_b")), lit(1)), 4))
       .as[Double].collect().toSeq
-    val got = pairs.select(call_function("graft_jaccard", $"sh_a", $"sh_b"))
+    val got = pairs.select(kc(ArrayJaccard(ex($"sh_a"), ex($"sh_b"))))
       .as[Double].collect().toSeq
     assert(got == exp)
   }
 
   test("graft_dot returns null on ragged arrays, matching the HOF form") {
-    ArrayDotProduct.ensure(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f)), // ragged -> null
       (Array(1.0f, 2.0f, 0.0f), Array(4.0f, 5.0f, 6.0f))) // equal -> 14
       .toDF("a", "b")
       .select(
-        call_function("graft_dot", $"a", $"b").as("fast"),
+        kc(ArrayDotProduct(ex($"a"), ex($"b"))).as("fast"),
         Similarity.dot($"a", $"b").as("hof"))
     val rows = df.collect()
     assert(rows(0).isNullAt(0) && rows(0).isNullAt(1)) // both null on ragged
@@ -974,5 +939,46 @@ class OpsSpec extends AnyFunSuite {
       Literal(ArrayData.toArrayData(xs), ArrayType(FloatType, containsNull = false))
     assert(ArrayDotProduct(lit3(Array(1f, 2f)), lit3(Array(1f, 2f, 3f))).eval(null) == null)
     assert(ArrayDotProduct(lit3(Array(1f, 2f)), lit3(Array(3f, 4f))).eval(null) == 11.0d)
+  }
+
+  test("kernels reject a wrong-typed column at analysis (DATATYPE_MISMATCH)") {
+    // the type check runs in the analyzer, so a wrong-typed column raises
+    // AnalysisException when the frame is built — not an
+    // IllegalArgumentException from a constructor, nor a ClassCastException
+    // once tasks run
+    val df = Seq(("a b c", 1L)).toDF("s", "n")
+      .select($"s", split($"s", " ").as("toks"), array($"n").as("longs"))
+    val cases = Seq(
+      "graft_dot" -> ArrayDotProduct(ex($"toks"), ex($"toks")),
+      "graft_jaccard" -> ArrayJaccard(ex($"longs"), ex($"toks")),
+      "graft_rhp_sigs" -> RhpSigs(ex($"longs"), 12, 4),
+      "graft_ivf_cells" -> IvfCells(ex($"s"), Array(1), Array(Array(1f)), Array(1.0d),
+        1, roundCos = true),
+      "graft_shingles" -> WordShingles(ex($"longs"), 3))
+    cases.foreach { case (name, kernel) =>
+      val e = intercept[AnalysisException](df.select(kc(kernel)).collect())
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), s"$name: ${e.getMessage}")
+      assert(e.getMessage.contains(name), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("dupTrigramFraction pinned on edge inputs") {
+    // 1 - distinct/total over word trigrams of split(lower(trim(text)), \s+),
+    // rounded to 4 places; 0 below 3 tokens. Expected values by hand.
+    val cases = Seq(
+      "" -> 0.0, // one empty token, no trigram
+      "one" -> 0.0,
+      "one two" -> 0.0,
+      "a b c" -> 0.0, // one trigram
+      "a a a a a" -> 0.6667, // "a a a" x3, 1 distinct: 1 - 1/3
+      "x y z x y z" -> 0.25, // xyz yzx zxy xyz: 1 - 3/4
+      "  a b c a b c  " -> 0.25, // trim drops the spaces: as above
+      "\ta b c a b c" -> 0.2, // trim keeps the tab: tokens "", a, b, c, a, b, c
+      "The cat THE CAT the cat" -> 0.5) // lowered: 4 trigrams, 2 distinct
+    val got = cases.map(_._1).toDF("text")
+      .select($"text", TextOps.dupTrigramFraction($"text").as("f"))
+      .as[(String, Double)].collect().toMap
+    cases.foreach { case (text, want) =>
+      assert(got(text) == want, s"'$text' -> ${got(text)} (want $want)") }
   }
 }

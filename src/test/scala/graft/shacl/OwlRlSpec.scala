@@ -301,4 +301,23 @@ class OwlRlSpec extends AnyFunSuite {
     assert(none.conforms)
     assert(!owlrl.conforms)
   }
+
+  test("prp-trp: a 40-edge transitive chain closes to all 820 pairs") {
+    val chain = (0 until 40).map(i => s"ex:n$i ex:before ex:n${i + 1} .").mkString("\n")
+    val g = expandTtl(prefixes + "ex:before a owl:TransitiveProperty .\n" + chain)
+    val before = Iri("http://ex.org/before")
+    // every i < j over the 41 nodes: 41 * 40 / 2
+    assert(g.triples(p = Some(before)).size == 820)
+  }
+
+  test("prp-trp raises at its round cap instead of returning a partial closure") {
+    import spark.implicits._
+    val tp = "http://ex.org/before"
+    val chain = (0 until 60).map(i => (s"n$i", s"n${i + 1}")).toDF("s", "o")
+    // each round doubles the path length reached, so 5 rounds reach 32 < 60
+    val e = intercept[ReportableError](OwlRlInference.transitiveClosure(chain, tp, maxIter = 5))
+    assert(e.getMessage.contains(tp) && e.getMessage.contains("5 rounds"))
+    // the default cap closes the chain: every i < j over the 61 nodes
+    assert(OwlRlInference.transitiveClosure(chain, tp).count() == 61L * 60 / 2)
+  }
 }
